@@ -22,8 +22,16 @@ import os
 import sys
 
 
+def assertion(spec: str):
+    """``--assert`` value → ``Assertion``; a malformed spec is reported
+    by argparse as a usage error."""
+    from opensanctions_spark.plans.run import Assertion
+
+    return Assertion.parse(spec)
+
+
 def _cmd_run(args: argparse.Namespace) -> int:
-    from opensanctions_spark.plans.run import Assertion, DatasetConfig, run_dataset
+    from opensanctions_spark.plans.run import DatasetConfig, run_dataset
     from opensanctions_spark.session import get_session
     from opensanctions_spark.sources.archive import StatementArchive
 
@@ -34,13 +42,7 @@ def _cmd_run(args: argparse.Namespace) -> int:
             print("error: either --config or --dataset is required",
                   file=sys.stderr)
             return 2
-        assertions = []
-        for spec in args.asserts or []:
-            metric, op, threshold = spec.rsplit(":", 2)
-            assertions.append(
-                Assertion(metric=metric, op=op, threshold=int(threshold))
-            )
-        config = DatasetConfig(name=args.dataset, assertions=assertions)
+        config = DatasetConfig(name=args.dataset, assertions=args.asserts or [])
     spark = get_session(f"osp-run-{config.name}")
     spark.sparkContext.setLogLevel("WARN")
     statements = spark.read.parquet(args.statements)
@@ -183,19 +185,15 @@ def _cmd_analyze(args: argparse.Namespace) -> int:
 def _cmd_validate(args: argparse.Namespace) -> int:
     """`zavod validate` analogue: rebuild the entity view from the
     archive and run validators + assertions without exporting."""
-    from opensanctions_spark.plans.run import Assertion, validate_dataset
+    from opensanctions_spark.plans.run import validate_dataset
     from opensanctions_spark.session import get_session
     from opensanctions_spark.sources.archive import StatementArchive
 
     spark = get_session(f"osp-validate-{args.dataset}")
     spark.sparkContext.setLogLevel("WARN")
-    assertions = []
-    for spec in args.asserts or []:
-        metric, op, threshold = spec.rsplit(":", 2)
-        assertions.append(Assertion(metric=metric, op=op, threshold=int(threshold)))
     manifest = validate_dataset(
         spark, StatementArchive(spark, args.archive), args.dataset,
-        assertions=assertions, version=args.version,
+        assertions=args.asserts or [], version=args.version,
     )
     print(json.dumps(manifest, indent=2, default=str))
     return 1 if any(v.startswith("error") for v in manifest["violations"]) else 0
@@ -822,6 +820,7 @@ def main(argv: list[str] | None = None) -> int:
     run_p.add_argument("--run-time", default="2024-01-01T00:00:00")
     run_p.add_argument(
         "--assert", dest="asserts", action="append", metavar="METRIC:OP:N",
+        type=assertion,
         help="assertion, e.g. entity_count:min:10 (repeatable)",
     )
     run_p.set_defaults(fn=_cmd_run)
@@ -854,6 +853,7 @@ def main(argv: list[str] | None = None) -> int:
     v_p.add_argument("--version", default=None)
     v_p.add_argument(
         "--assert", dest="asserts", action="append", metavar="METRIC:OP:N",
+        type=assertion,
         help="assertion, e.g. entity_count:min:10 (repeatable)",
     )
     v_p.set_defaults(fn=_cmd_validate)

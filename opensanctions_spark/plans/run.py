@@ -1,21 +1,35 @@
-"""The full dataset run: crawl output → statements → entities → exports.
+"""The dataset run: crawl output → statements → entities → exports.
 
-Mirrors ``zavod run`` (``zavod/zavod/cli/etl.py:95-154``) as ONE Spark job
-graph:
+Mirrors ``zavod run`` (``zavod/zavod/cli/etl.py:95-154``): the fused run
+is the crawl → validate → export stages back to back, and here both the
+fused ``run_dataset`` and the staged verbs are built from the same four
+steps, each implemented once:
 
-1. statements stamped with first_seen propagated from the previous
-   version (J1, ``zavod/zavod/runtime/timestamps.py``),
-2. versioned parquet write (the statements.pack + archive analogue),
-3. entity assembly (A1) — persisted once,
-4. validation: assertion thresholds with fatal-min semantics (A12,
-   ``zavod/zavod/validators/assertions.py:24-183``) + dangling-reference
-   anti-join (J10, ``zavod/zavod/validators/__init__.py:15-27``),
-5. every exporter off the shared scan (§2.2),
-6. delta vs the previous version (D0/D1) written alongside.
+- **stamp** (``_stamp``): datapatch lookups, ``last_seen``, the resolver
+  rekey (J2, fused run only), then ``first_seen`` propagated from the
+  last SUCCESSFUL version (J1, ``zavod/zavod/runtime/timestamps.py``);
+- **entity view** (``_entity_view``): read one archived version back and
+  assemble it (A1) — persisted once for every consumer;
+- **check** (``_check``): one GROUPING SETS pass for entity/target/schema
+  counts, the extended metrics the assertions need, and the threshold
+  checks with fatal-min semantics (A12,
+  ``zavod/zavod/validators/assertions.py:24-183``);
+- **delta** (``_delta``): ADD/MOD/DEL vs a previous version (D0/D1),
+  ``delta.json`` and ``delta_index.json``.
 
-The reference does store-sync into LevelDB between crawl and export; on
-Spark that whole stage *is* the assembly shuffle — there is no separate
-materialization.
+Which verb runs which step:
+
+- ``crawl_dataset``: stamp → version write;
+- ``validate_dataset``: entity view → check → dangling references;
+- ``export_dataset``: entity view → sinks → delta;
+- ``run_dataset``: stamp → pending write → entity view → check (abort
+  on error) → dangling references → sinks → delta → promote.
+
+The dangling-reference anti-join (J10,
+``zavod/zavod/validators/__init__.py:15-27``) and every exporter off the
+shared scan (§2.2) complete the run. The reference does store-sync into
+LevelDB between crawl and export; on Spark that whole stage *is* the
+assembly shuffle — there is no separate materialization.
 """
 
 from __future__ import annotations
@@ -35,6 +49,11 @@ from opensanctions_spark.operators.timestamps import propagate_first_seen
 from opensanctions_spark.sources.archive import StatementArchive
 
 
+#: Comparison → violation level: only min failures abort, max failures
+#: warn (``validators/assertions.py is_assertion_fatal``).
+_LEVELS = {"min": "error", "max": "warning"}
+
+
 @dataclass
 class Assertion:
     metric: str          # e.g. "entity_count", "schema:Person", "country:de",
@@ -42,6 +61,21 @@ class Assertion:
     op: str              # "min" | "max"
     threshold: float     # int for counts, float for fill rates
     level: str = "error"  # "error" (fatal) | "warning"
+
+    @classmethod
+    def parse(cls, spec: str) -> "Assertion":
+        """``METRIC:OP:N`` (the CLI ``--assert`` and legacy config string
+        form) → an Assertion; the threshold may be fractional and the
+        level follows the op like ``parse_assertions``. An op other than
+        min/max raises ValueError."""
+        metric, op, raw = spec.rsplit(":", 2)
+        if op not in _LEVELS:
+            raise ValueError(f"Unknown assertion: {op}")
+        try:
+            threshold: float = int(raw)
+        except ValueError:
+            threshold = float(raw)
+        return cls(metric, op, threshold, _LEVELS[op])
 
 
 #: Baseline assertions merged into every dict-form dataset config, leaf-
@@ -86,18 +120,13 @@ def merge_assertions_config(base: dict, override: dict) -> dict:
 def parse_assertions(config: dict) -> list[Assertion]:
     """Reference YAML assertion block → flat Assertion rows
     (``zavod/zavod/meta/assertion.py parse_assertions`` + the
-    validator's level rule: only min/GTE failures abort, max/LTE
-    failures warn — ``validators/assertions.py is_assertion_fatal``).
-    Unknown comparisons or metrics raise ValueError, like the
-    reference's Enum lookups."""
+    validator's level rule, ``_LEVELS``). Unknown comparisons or metrics
+    raise ValueError, like the reference's Enum lookups."""
     out: list[Assertion] = []
     for key, metrics in config.items():
-        if key == "min":
-            level = "error"
-        elif key == "max":
-            level = "warning"
-        else:
+        if key not in _LEVELS:
             raise ValueError(f"Unknown assertion: {key}")
+        level = _LEVELS[key]
         for metric, mconf in metrics.items():
             if metric not in _ASSERTION_METRICS:
                 raise ValueError(f"Unknown metric: {metric}")
@@ -166,15 +195,10 @@ class DatasetConfig:
         else:
             # legacy flat list form ("metric:op:threshold" strings or
             # Assertion kwarg dicts) — used as given, no defaults
-            assertions = []
-            for a in raw:
-                if isinstance(a, str):
-                    metric, op, threshold = a.rsplit(":", 2)
-                    assertions.append(
-                        Assertion(metric=metric, op=op, threshold=int(threshold))
-                    )
-                else:
-                    assertions.append(Assertion(**a))
+            assertions = [
+                Assertion.parse(a) if isinstance(a, str) else Assertion(**a)
+                for a in raw
+            ]
         lookups = {}
         if "lookups" in data:
             from opensanctions_spark.functions.lookups import load_lookups
@@ -335,45 +359,43 @@ def check_assertions(stats: dict[str, float], assertions: list[Assertion]) -> li
     return out
 
 
-def run_dataset(
-    spark: SparkSession,
+def _stamp(
     statements: DataFrame,
-    config: DatasetConfig,
+    name: str,
     archive: StatementArchive,
-    out_dir: str,
     run_time: str,
-    version: str | None = None,
+    lookups: dict | None = None,
     canonical_map: DataFrame | None = None,
-    single_file: bool = True,
-) -> RunResult:
-    """Execute the full pipeline for one dataset run.
+) -> tuple[DataFrame, DataFrame | None, str | None, bool]:
+    """The stamp step: datapatch cleaning, seen-timestamps, the resolver
+    rekey, then first_seen from the previous version (J1). Returns
+    ``(statements, prev, map_fp, resolver_dropped)``: ``prev`` is the
+    previous version's statements (None on a first run), ``map_fp`` the
+    fingerprint of ``canonical_map`` and ``resolver_dropped`` whether
+    ``prev`` stores resolver-merged ids this mapless run cannot unmerge.
 
-    ``canonical_map`` is the resolver's (entity_id, canonical_id)
-    snapshot; when given, statements are rekeyed through it (J2,
-    broadcast) before assembly — the reference applies its linker the
-    same way, at store-read time (``zavod/zavod/store.py:36-47``), so
-    merged entities collapse into one canonical group in A1."""
-    # 1. first_seen propagation from the previous version (J1); both seen-
-    # timestamps are stamped at emit time like the reference's context.emit.
-    # "previous" = last SUCCESSFUL run — a version written by a run that
-    # later failed validation must not feed timestamps or deltas.
-    prev_version = archive.last_successful(config.name)
-    # external=True: the first_seen index must cover external statements
-    # too (see crawl_dataset — an internal-only read resets external
-    # rows' first_seen every run)
-    prev = archive.read(config.name, external=True) if prev_version else None
-    # 0. datapatch cleaning: the dataset's prop.* lookup tables rewrite
+    "previous" = the last SUCCESSFUL version — the one ``archive.read``
+    falls back to; a version written by a run that later failed
+    validation must not feed timestamps or deltas. The read includes
+    EXTERNAL statements: an internal-only index would drop their ids and
+    reset their first_seen on every analyzer/enricher re-run."""
+    prev_version = archive.last_successful(name)
+    prev = (
+        archive.read(name, version=prev_version, external=True)
+        if prev_version else None
+    )
+    # datapatch cleaning: the dataset's prop.* lookup tables rewrite
     # values before anything downstream sees them (the reference cleans at
     # emit time — zavod/zavod/runtime/lookups.py:52-83); map-only stage
-    if config.lookups:
+    if lookups:
         from opensanctions_spark.functions.lookups import apply_statement_lookups
 
-        statements = apply_statement_lookups(statements, config.lookups)
+        statements = apply_statement_lookups(statements, lookups)
     statements = statements.drop("first_seen").withColumn(
         "last_seen", F.lit(run_time)
     )
 
-    # 1b. resolver rekey (J2) BEFORE the versioned write. The reference's
+    # resolver rekey (J2) BEFORE the versioned write. The reference's
     # linker applies to every store access (zavod/zavod/store.py:36-47);
     # rekeying the incoming statements up front means the stored version
     # is already canonical, so (a) the bucketed layout clusters on the
@@ -395,54 +417,56 @@ def run_dataset(
 
         map_fp = mapping_fingerprint(canonical_map)
         statements = apply_canonical(statements, canonical_map)
-        if prev is not None and (
-            archive.canonical_fp(config.name, prev_version) != map_fp
-        ):
+        if prev is not None and archive.canonical_fp(name, prev_version) != map_fp:
             prev = apply_canonical(prev, canonical_map)
-    elif prev is not None and (
-        archive.canonical_fp(config.name, prev_version) is not None
-    ):
-        # the previous version stores resolver-merged canonical ids but
-        # this run has no map: J1 (id-keyed) is unaffected, but the
-        # delta below will diff merged ids against raw ones — surface it
+    elif prev is not None and archive.canonical_fp(name, prev_version) is not None:
+        # J1 (id-keyed) is unaffected, but the delta will diff merged ids
+        # against raw ones — the caller surfaces it
         resolver_dropped = True
 
-    if prev is not None:
+    if prev is None:
+        statements = statements.withColumn("first_seen", F.lit(run_time))
+    else:
         # with a resolver map both sides are canonical-consistent, so the
-        # J1 probe keys on (canonical_id, id) rows — the prev
-        # side rides the bucketed clustering with zero exchange and the
-        # current side pays the single canonical_id exchange the write
-        # and assembly want anyway. Mapless runs keep the id-keyed join
-        # (caller-set canonical ids need not match across versions).
+        # J1 probe keys on (canonical_id, id) rows — the prev side rides
+        # the bucketed clustering with zero exchange and the current side
+        # pays the single canonical_id exchange the write and assembly
+        # want anyway. Mapless runs keep the id-keyed join (caller-set
+        # canonical ids need not match across versions).
         statements = propagate_first_seen(
             statements,
             prev.select("canonical_id", "id", "first_seen"),
             run_time=run_time,
             cluster_col="canonical_id" if canonical_map is not None else None,
         )
-    else:
-        statements = statements.withColumn("first_seen", F.lit(run_time))
-    # 2. versioned write, then read back (single lineage for all consumers).
-    # Written PENDING (success=False): the version is recorded and
-    # debuggable, but the backfill pointer only advances once the whole
-    # run — validation included — completes (mark_successful below), so a
-    # fatal-assertion abort can never poison the next run's backfill.
-    version = archive.write(
-        statements, config.name, version, success=False, canonical_fp=map_fp
-    )
-    statements = archive.read(config.name, version=version, external=True)
+    return statements, prev, map_fp, resolver_dropped
 
-    # 3. assembly — one shuffle, persisted for validators + exporters.
-    # With bucketed statement storage the scan is already clustered on
-    # canonical_id (the rekey happened before the write, so the stored
-    # clustering IS the final one) and the assembly runs exchange-free.
-    pre_clustered = archive.is_bucketed(config.name, version)
+
+def _entity_view(
+    archive: StatementArchive, name: str, version: str | None
+) -> tuple[DataFrame, DataFrame, bool]:
+    """The entity-view step: one archived version read back (a single
+    lineage for every consumer) and assembled (A1), persisted for the
+    validators and sinks. Returns ``(statements, entities,
+    pre_clustered)``: with bucketed statement storage the scan is already
+    clustered on canonical_id (the rekey happened before the write, so
+    the stored clustering IS the final one) and the assembly runs
+    exchange-free."""
+    statements = archive.read(name, version=version, external=True)
+    pre_clustered = archive.is_bucketed(name, version)
     entities = assemble_entities(statements, pre_clustered=pre_clustered).persist()
+    return statements, entities, pre_clustered
 
-    # 4. validation — ONE job: per-schema counts and the entity/target
-    # totals come out of a single GROUPING SETS pass over the cached
-    # entity view (the reference's validators share one scan the same way,
-    # zavod/zavod/validators/__init__.py:72-104)
+
+def _check(
+    entities: DataFrame, assertions: list[Assertion]
+) -> tuple[int, int, dict[str, int], list[str]]:
+    """The check step: ``(entity_count, target_count, schema_counts,
+    violations)``. Per-schema counts and the entity/target totals come
+    out of ONE GROUPING SETS pass over the cached entity view (the
+    reference's validators share one scan the same way,
+    zavod/zavod/validators/__init__.py:72-104); the extended metrics
+    only run when an assertion needs them."""
     from opensanctions_spark.exporters import target_flag
 
     stat_rows = (
@@ -459,155 +483,16 @@ def run_dataset(
         .collect()
     )
     schema_counts = {r["schema"]: r["n"] for r in stat_rows if r["g"] == 0}
-    total_row = next(r for r in stat_rows if r["g"] == 1)
-    entity_count = total_row["n"]
-    target_count = total_row["n_target"] or 0
+    total = next(r for r in stat_rows if r["g"] == 1)
+    entity_count, target_count = total["n"], total["n_target"] or 0
     stats: dict[str, float] = {
         "entity_count": entity_count,
         "target_count": target_count,
         **{f"schema:{k}": v for k, v in schema_counts.items()},
     }
-    stats.update(_extended_stats(entities, config.assertions))
-    violations = check_assertions(stats, config.assertions)
-    if any(v.startswith("error") for v in violations):
-        entities.unpersist()
-        raise AssertionError("; ".join(violations))
-    dangling = dangling_references(entities).count()
-
-    # issues.json + by-level counts for the index (the reference's
-    # DatasetIssues artifact: validation findings become issue records)
-    from opensanctions_spark.exporters.metadata import write_issues
-
-    issues = [
-        {
-            "level": v.split(":", 1)[0],
-            "message": v.split(": ", 1)[-1],
-            "dataset": config.name,
-        }
-        for v in violations
-    ]
-    if not config.has_user_assertions:
-        # the reference's maintainer nudge: error-LEVEL log, but never
-        # an abort (validators/assertions.py:166-177 sets no abort flag
-        # for it) — so it rides the issues channel, not the violations
-        issues.append(
-            {
-                "level": "error",
-                "message": "Dataset has no assertions.",
-                "dataset": config.name,
-            }
-        )
-    if dangling:
-        issues.append(
-            {
-                "level": "warning",
-                "message": f"{dangling} dangling entity references",
-                "dataset": config.name,
-            }
-        )
-    if resolver_dropped:
-        issues.append(
-            {
-                "level": "warning",
-                "message": (
-                    "previous version was written under a resolver map but "
-                    "this run has none: the delta may report merged ids as "
-                    "ADD/DEL pairs"
-                ),
-                "dataset": config.name,
-            }
-        )
-    os.makedirs(out_dir, exist_ok=True)
-    issue_levels = write_issues(out_dir, issues)
-
-    # 5. exports (shared scan; single_file=False is the cluster path —
-    # range-ordered multi-part sink files, see exporters.export_all)
-    export_counts = export_all(
-        entities, statements, out_dir, dataset=config.name,
-        single_file=single_file, clustered=pre_clustered,
-        version=str(version), run_time=run_time,
-        issue_levels=issue_levels, dataset_meta=config.metadata,
-    )
-
-    # 6. delta vs previous version (D0/D1)
-    if prev is not None:
-        diff = version_diff(hashed_entities(prev), hashed_entities(statements))
-        delta_ops = {
-            r["op"]: r["n"]
-            for r in diff.groupBy("op").agg(F.count("*").alias("n")).collect()
-        }
-        # reference line format: {"op": ..., "entity": {...}} per row
-        # (zavod/zavod/exporters/delta.py:29-38)
-        from opensanctions_spark.operators.delta import delta_export_rows
-
-        delta_out = delta_export_rows(diff, entities).orderBy("canonical_id")
-        if single_file:
-            delta_out = delta_out.coalesce(1)
-        delta_out.select("line").write.mode("overwrite").text(
-            os.path.join(out_dir, "delta.json")
-        )
-    else:
-        delta_ops = {}
-
-    result = RunResult(
-        dataset=config.name,
-        version=version,
-        entity_count=entity_count,
-        statement_count=export_counts.get("statements.csv", 0),
-        target_count=target_count,
-        schema_counts=schema_counts,
-        delta_ops=delta_ops,
-        dangling_count=dangling,
-        violations=violations,
-        export_counts=export_counts,
-    )
-    with open(os.path.join(out_dir, "run.json"), "w") as fh:
-        json.dump(
-            {k: v for k, v in result.__dict__.items()}, fh, indent=2, sort_keys=True
-        )
-    # the run completed (exports + validation): promote the version so
-    # backfill reads resolve it
-    archive.mark_successful(config.name, version)
-    entities.unpersist()
-    return result
-
-
-def crawl_dataset(
-    spark: SparkSession,
-    statements: DataFrame,
-    name: str,
-    archive: StatementArchive,
-    run_time: str,
-    version: str | None = None,
-    lookups: dict | None = None,
-) -> str:
-    """The standalone crawl stage (``zavod crawl``,
-    ``zavod/zavod/cli/etl.py:24-36``): stamp seen timestamps, propagate
-    first_seen from the previous version (J1), write ONE immutable
-    archive version. Returns the version id — validation/export read it
-    back, so re-running either never re-crawls. ``lookups`` applies the
-    dataset's datapatch cleaning pass first, like the fused run."""
-    if lookups:
-        from opensanctions_spark.functions.lookups import apply_statement_lookups
-
-        statements = apply_statement_lookups(statements, lookups)
-    prev_version = archive.latest(name)
-    # the first_seen index must cover EXTERNAL statements too: an
-    # analyzer/enricher re-run would otherwise reset first_seen on every
-    # external row each night (the internal-only read would drop their
-    # ids from the index and propagate_first_seen would coalesce to the
-    # new run_time)
-    prev = archive.read(name, external=True) if prev_version else None
-    statements = statements.drop("first_seen").withColumn(
-        "last_seen", F.lit(run_time)
-    )
-    if prev is not None:
-        statements = propagate_first_seen(
-            statements, prev.select("id", "first_seen"), run_time=run_time
-        )
-    else:
-        statements = statements.withColumn("first_seen", F.lit(run_time))
-    return archive.write(statements, name, version)
+    stats.update(_extended_stats(entities, assertions))
+    violations = check_assertions(stats, assertions)
+    return entity_count, target_count, schema_counts, violations
 
 
 def _delta_artifact_nonempty(path: str) -> bool:
@@ -626,27 +511,172 @@ def _delta_artifact_nonempty(path: str) -> bool:
     return False
 
 
-def _entity_stats(entities: DataFrame) -> tuple[int, int, dict[str, int]]:
-    """(entity_count, target_count, schema_counts) in ONE GROUPING SETS
-    pass over the entity view — the shared validator scan."""
-    from opensanctions_spark.exporters import target_flag
+def _delta(
+    archive: StatementArchive,
+    name: str,
+    version: str,
+    prev: DataFrame | None,
+    statements: DataFrame,
+    entities: DataFrame,
+    out_dir: str,
+    single_file: bool,
+) -> dict[str, int]:
+    """The delta step: ADD/MOD/DEL of ``version`` against ``prev`` (D0/D1)
+    written as ``delta.json``, plus the ``delta_index.json`` listing it.
+    Returns the per-op counts; a first version (``prev`` None) writes
+    neither file."""
+    if prev is None:
+        return {}
+    from opensanctions_spark.exporters.metadata import write_delta_index
+    from opensanctions_spark.operators.delta import delta_export_rows
 
-    stat_rows = (
-        entities.select(
-            "schema",
-            target_flag(F.col("properties")).cast("long").alias("is_target"),
-        )
-        .groupingSets([["schema"], []], "schema")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("is_target").alias("n_target"),
-            F.grouping("schema").alias("g"),
-        )
-        .collect()
+    diff = version_diff(hashed_entities(prev), hashed_entities(statements))
+    delta_ops = {
+        r["op"]: r["n"]
+        for r in diff.groupBy("op").agg(F.count("*").alias("n")).collect()
+    }
+    # reference line format: {"op": ..., "entity": {...}} per row
+    # (zavod/zavod/exporters/delta.py:29-38)
+    delta_out = delta_export_rows(diff, entities).orderBy("canonical_id")
+    if single_file:
+        delta_out = delta_out.coalesce(1)
+    delta_out.select("line").write.mode("overwrite").text(
+        os.path.join(out_dir, "delta.json")
     )
-    schema_counts = {r["schema"]: r["n"] for r in stat_rows if r["g"] == 0}
-    total = next(r for r in stat_rows if r["g"] == 1)
-    return total["n"], total["n_target"] or 0, schema_counts
+    # K8/K12: the delta-versions index. The reference
+    # (``zavod/zavod/exporters/metadata/__init__.py:200-256``,
+    # include_latest=True) lists the just-written version FIRST — its
+    # delta.json ships alongside the index even though the version is
+    # still pending promotion — and then only prior versions whose delta
+    # artifact actually exists and is non-empty, so the index never
+    # points at missing files.
+    indexable = [
+        v for v in archive.successful_versions(name)
+        if v != version
+        and _delta_artifact_nonempty(
+            os.path.join(
+                os.path.dirname(archive.version_path(name, v)), "delta.json"
+            )
+        )
+    ]
+    if _delta_artifact_nonempty(os.path.join(out_dir, "delta.json")):
+        indexable.append(version)
+    write_delta_index(out_dir, name, indexable)
+    return delta_ops
+
+
+def run_dataset(
+    spark: SparkSession,
+    statements: DataFrame,
+    config: DatasetConfig,
+    archive: StatementArchive,
+    out_dir: str,
+    run_time: str,
+    version: str | None = None,
+    canonical_map: DataFrame | None = None,
+    single_file: bool = True,
+) -> RunResult:
+    """Execute the full pipeline for one dataset run.
+
+    ``canonical_map`` is the resolver's (entity_id, canonical_id)
+    snapshot; when given, statements are rekeyed through it (J2,
+    broadcast) before assembly — the reference applies its linker the
+    same way, at store-read time (``zavod/zavod/store.py:36-47``), so
+    merged entities collapse into one canonical group in A1."""
+    name = config.name
+    statements, prev, map_fp, resolver_dropped = _stamp(
+        statements, name, archive, run_time, config.lookups, canonical_map
+    )
+    # Written PENDING (success=False): the version is recorded and
+    # debuggable, but the backfill pointer only advances once the whole
+    # run — validation included — completes (mark_successful below), so a
+    # fatal-assertion abort can never poison the next run's backfill.
+    version = archive.write(
+        statements, name, version, success=False, canonical_fp=map_fp
+    )
+    statements, entities, pre_clustered = _entity_view(archive, name, version)
+    entity_count, target_count, schema_counts, violations = _check(
+        entities, config.assertions
+    )
+    if any(v.startswith("error") for v in violations):
+        entities.unpersist()
+        raise AssertionError("; ".join(violations))
+    dangling = dangling_references(entities).count()
+
+    # issues.json + by-level counts for the index (the reference's
+    # DatasetIssues artifact: validation findings become issue records)
+    from opensanctions_spark.exporters.metadata import write_issues
+
+    findings = [(v.split(":", 1)[0], v.split(": ", 1)[-1]) for v in violations]
+    if not config.has_user_assertions:
+        # the reference's maintainer nudge: error-LEVEL log, but never
+        # an abort (validators/assertions.py:166-177 sets no abort flag
+        # for it) — so it rides the issues channel, not the violations
+        findings.append(("error", "Dataset has no assertions."))
+    if dangling:
+        findings.append(("warning", f"{dangling} dangling entity references"))
+    if resolver_dropped:
+        findings.append((
+            "warning",
+            "previous version was written under a resolver map but this run"
+            " has none: the delta may report merged ids as ADD/DEL pairs",
+        ))
+    issues = [
+        {"level": level, "message": message, "dataset": name}
+        for level, message in findings
+    ]
+    os.makedirs(out_dir, exist_ok=True)
+    issue_levels = write_issues(out_dir, issues)
+
+    # shared-scan sinks (single_file=False is the cluster path —
+    # range-ordered multi-part sink files, see exporters.export_all)
+    export_counts = export_all(
+        entities, statements, out_dir, dataset=name,
+        single_file=single_file, clustered=pre_clustered,
+        version=str(version), run_time=run_time,
+        issue_levels=issue_levels, dataset_meta=config.metadata,
+    )
+    delta_ops = _delta(
+        archive, name, version, prev, statements, entities, out_dir, single_file
+    )
+
+    result = RunResult(
+        dataset=name,
+        version=version,
+        entity_count=entity_count,
+        statement_count=export_counts.get("statements.csv", 0),
+        target_count=target_count,
+        schema_counts=schema_counts,
+        delta_ops=delta_ops,
+        dangling_count=dangling,
+        violations=violations,
+        export_counts=export_counts,
+    )
+    with open(os.path.join(out_dir, "run.json"), "w") as fh:
+        json.dump(result.__dict__, fh, indent=2, sort_keys=True)
+    # the run completed (exports + validation): promote the version so
+    # backfill reads resolve it
+    archive.mark_successful(name, version)
+    entities.unpersist()
+    return result
+
+
+def crawl_dataset(
+    spark: SparkSession,
+    statements: DataFrame,
+    name: str,
+    archive: StatementArchive,
+    run_time: str,
+    version: str | None = None,
+    lookups: dict | None = None,
+) -> str:
+    """The standalone crawl stage (``zavod crawl``,
+    ``zavod/zavod/cli/etl.py:24-36``): the stamp step, then ONE immutable
+    archive version. Returns the version id — validation/export read it
+    back, so re-running either never re-crawls. ``lookups`` applies the
+    dataset's datapatch cleaning pass first, like the fused run."""
+    statements = _stamp(statements, name, archive, run_time, lookups)[0]
+    return archive.write(statements, name, version)
 
 
 def validate_dataset(
@@ -655,37 +685,21 @@ def validate_dataset(
     name: str,
     assertions: list[Assertion] | None = None,
     version: str | None = None,
-    canonical_map: DataFrame | None = None,
 ) -> dict:
     """The standalone validate stage (``zavod validate``,
-    ``zavod/zavod/cli/etl.py:38-55``): rebuild the entity view from the
-    archived statements and run the shared-scan validators + assertion
-    checks WITHOUT exporting. Returns the validation manifest."""
+    ``zavod/zavod/cli/etl.py:38-55``): the entity view of one archived
+    version (default: the last successful) and the check step, WITHOUT
+    exporting. Returns the validation manifest."""
     version = version or archive.last_successful(name)
-    statements = archive.read(name, version=version, external=True)
-    if canonical_map is not None:
-        from opensanctions_spark.operators.resolve import apply_canonical
-
-        statements = apply_canonical(statements, canonical_map)
-    pre_clustered = (
-        canonical_map is None
-        and version is not None
-        and archive.is_bucketed(name, version)
+    _, entities, _ = _entity_view(archive, name, version)
+    entity_count, target_count, schema_counts, violations = _check(
+        entities, assertions or []
     )
-    entities = assemble_entities(statements, pre_clustered=pre_clustered).persist()
-    entity_count, target_count, schema_counts = _entity_stats(entities)
-    stats = {
-        "entity_count": entity_count,
-        "target_count": target_count,
-        **{f"schema:{k}": v for k, v in schema_counts.items()},
-    }
-    stats.update(_extended_stats(entities, assertions or []))
-    violations = check_assertions(stats, assertions or [])
     dangling = dangling_references(entities).count()
     entities.unpersist()
     return {
         "dataset": name,
-        "version": version or archive.latest(name),
+        "version": version,
         "entity_count": entity_count,
         "target_count": target_count,
         "schema_counts": schema_counts,
@@ -701,42 +715,23 @@ def export_dataset(
     out_dir: str,
     run_time: str,
     version: str | None = None,
-    canonical_map: DataFrame | None = None,
     single_file: bool = True,
     dataset_meta: dict | None = None,
 ) -> dict:
     """The standalone export stage (``zavod export``,
-    ``zavod/zavod/cli/etl.py:57-73``): rebuild the entity view from one
-    archived version, run every sink + the K12 metadata set, and write
-    the ADD/MOD/DEL delta against the previous SUCCESSFUL version.
+    ``zavod/zavod/cli/etl.py:57-73``): the entity view of one archived
+    version, every sink + the K12 metadata set, and the delta step
+    against the previous SUCCESSFUL version.
 
     ``version=None`` exports the newest RECORDED version — deliberately
     the working-directory semantics of ``zavod export`` (crawl → export
     runs before promotion, so the version being exported is typically
     still pending); published-only reads go through ``archive.read`` /
     ``--as-of``."""
-    import os
-
     version = version or archive.latest(name)
     if version is None:
         raise ValueError(f"no archived versions for dataset {name!r}")
-    statements = archive.read(name, version=version, external=True)
-    # bucketed archive reads feed a clustering-free assembly; a resolver
-    # rekey invalidates it UNLESS the manifest fingerprint proves the
-    # version was already written under this exact map (§21c fast path)
-    pre_clustered = archive.is_bucketed(name, version)
-    if canonical_map is not None:
-        from opensanctions_spark.operators.resolve import (
-            apply_canonical,
-            mapping_fingerprint,
-        )
-
-        if archive.canonical_fp(name, version) != mapping_fingerprint(
-            canonical_map
-        ):
-            statements = apply_canonical(statements, canonical_map)
-            pre_clustered = False
-    entities = assemble_entities(statements, pre_clustered=pre_clustered).persist()
+    statements, entities, pre_clustered = _entity_view(archive, name, version)
     export_counts = export_all(
         entities, statements, out_dir, dataset=name,
         single_file=single_file, clustered=pre_clustered,
@@ -755,53 +750,12 @@ def export_dataset(
         v for v in archive.successful_versions(name)
         if v < version and v in readable
     ]
-    prior = priors[-1] if priors else None
-    delta_ops: dict[str, int] = {}
-    if prior is not None:
-        prev_stmts = archive.read(name, version=prior, external=True)
-        # the linker applies to EVERY store read (store.py:36-47) — the
-        # delta's prior side included, same fix as run_dataset (r11)
-        if canonical_map is not None:
-            from opensanctions_spark.operators.resolve import apply_canonical
-
-            prev_stmts = apply_canonical(prev_stmts, canonical_map)
-        diff = version_diff(
-            hashed_entities(prev_stmts), hashed_entities(statements)
-        )
-        delta_ops = {
-            r["op"]: r["n"]
-            for r in diff.groupBy("op").agg(F.count("*").alias("n")).collect()
-        }
-        from opensanctions_spark.operators.delta import delta_export_rows
-
-        delta_out = delta_export_rows(diff, entities).orderBy("canonical_id")
-        if single_file:
-            delta_out = delta_out.coalesce(1)
-        delta_out.select("line").write.mode("overwrite").text(
-            os.path.join(out_dir, "delta.json")
-        )
-        # K8/K12: the delta-versions index. The reference
-        # (``zavod/zavod/exporters/metadata/__init__.py:200-256``,
-        # include_latest=True) lists the just-exported version FIRST —
-        # its delta.json ships alongside the index even though the
-        # version is still pending promotion — and then only prior
-        # versions whose delta artifact actually exists and is
-        # non-empty, so the index never points at missing files.
-        from opensanctions_spark.exporters.metadata import write_delta_index
-
-        indexable = [
-            v for v in archive.successful_versions(name)
-            if v != version
-            and _delta_artifact_nonempty(
-                os.path.join(
-                    os.path.dirname(archive.version_path(name, v)),
-                    "delta.json",
-                )
-            )
-        ]
-        if _delta_artifact_nonempty(os.path.join(out_dir, "delta.json")):
-            indexable.append(version)
-        write_delta_index(out_dir, name, indexable)
+    prev = (
+        archive.read(name, version=priors[-1], external=True) if priors else None
+    )
+    delta_ops = _delta(
+        archive, name, version, prev, statements, entities, out_dir, single_file
+    )
     entities.unpersist()
     return {
         "dataset": name,

@@ -117,6 +117,13 @@ def test_two_version_run(spark, paths):
     assert manifest["version"] == "20260813-000000"
     assert manifest["delta_ops"] == {"ADD": 1, "DEL": 1, "MOD": 1}
 
+    # the fused run writes the delta-versions index like export does: the
+    # first run has no delta, the second lists its own version
+    assert not os.path.exists(os.path.join(out_dir, "r1", "delta_index.json"))
+    with open(os.path.join(out_dir, "r2", "delta_index.json")) as fh:
+        didx = json.load(fh)
+    assert list(didx["versions"]) == ["20260813-000000"]
+
 
 def test_run_with_resolver_map(spark, paths):
     """J2 inside the run plan: a POSITIVE judgement between p1 and p3
@@ -513,6 +520,29 @@ def test_failed_run_does_not_poison_backfill(spark, paths):
     assert archive.versions("fixture") == ["20260801-000000", "20260813-000000"]
     assert archive.last_successful("fixture") == "20260801-000000"
     assert archive.read("fixture").count() == v1_rows
+
+
+def test_crawl_after_aborted_first_run(spark, paths):
+    """When the only recorded version is a pending one (a first run that
+    aborted on a fatal assertion), the crawl stage treats the dataset as
+    new: there is no successful version to take first_seen from."""
+    from opensanctions_spark.plans.run import crawl_dataset
+
+    v1_csv, _, archive_dir, out_dir = paths
+    archive = StatementArchive(spark, archive_dir)
+    bad = DatasetConfig(name="fixture", assertions=[Assertion("entity_count", "min", 100)])
+    with pytest.raises(AssertionError):
+        run_dataset(
+            spark, crawl(spark, v1_csv), bad, archive, out_dir=out_dir,
+            run_time="2026-08-01T00:00:00", version="20260801-000000",
+        )
+    assert archive.last_successful("fixture") is None
+    ver = crawl_dataset(
+        spark, crawl(spark, v1_csv), "fixture", archive,
+        run_time="2026-08-13T00:00:00", version="20260813-000000",
+    )
+    stamped = archive.read("fixture", version=ver).select("first_seen").distinct()
+    assert [r["first_seen"] for r in stamped.collect()] == ["2026-08-13T00:00:00"]
 
 
 def test_publish_release_copy_and_promotion(spark, paths):

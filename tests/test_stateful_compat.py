@@ -428,10 +428,12 @@ def test_full_import_census_resolves():
     import os
     import subprocess
 
+    datasets = "/root/reference/datasets"
+    if not os.path.isdir(datasets):
+        pytest.skip(f"reference checkout absent: {datasets}")
     out = subprocess.run(
         ["grep", "-rhE", "^from zavod[. ]|^import zavod",
-         *[os.path.join("/root/reference/datasets", d)
-           for d in os.listdir("/root/reference/datasets")]],
+         *[os.path.join(datasets, d) for d in os.listdir(datasets)]],
         capture_output=True, text=True,
     ).stdout
     known_unresolved = {

@@ -52,6 +52,42 @@ def test_parse_assertions_reference_cases():
         parse_assertions({"typo": {"countries": 1}})
 
 
+def test_assertion_parse_spec_strings():
+    """The ``METRIC:OP:N`` form (CLI ``--assert``, legacy config lists):
+    fractional thresholds parse, the level follows the op like
+    parse_assertions, and an unknown op is refused rather than never
+    checked."""
+    assert Assertion.parse("entity_count:min:10") == Assertion(
+        "entity_count", "min", 10, "error"
+    )
+    assert Assertion.parse("fill:Person.name:min:0.5") == Assertion(
+        "fill:Person.name", "min", 0.5, "error"
+    )
+    # a max failure warns and never aborts
+    over = Assertion.parse("schema:Person:max:3")
+    assert over.level == "warning"
+    assert check_assertions({"schema:Person": 5}, [over]) == [
+        "warning: schema:Person=5 > max 3"
+    ]
+    with pytest.raises(ValueError):
+        Assertion.parse("entity_count:gte:5")
+    legacy = DatasetConfig.from_dict(
+        {"name": "ds", "assertions": ["countries:max:2"]}
+    )
+    assert legacy.assertions == [Assertion("countries", "max", 2, "warning")]
+
+
+def test_cli_assert_spec_errors_are_usage_errors(tmp_path):
+    """A bad ``--assert`` spec stops the CLI at argument parsing (exit 2),
+    before any Spark work."""
+    from opensanctions_spark.__main__ import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["validate", "--dataset", "ds", "--archive", str(tmp_path),
+              "--assert", "entity_count:gte:5"])
+    assert exc.value.code == 2
+
+
 def test_merge_assertions_config_leaf_override():
     base = {"min": {"property_fill_rate": {"Person": {"name": 0.95}}}}
     override = {"min": {"property_fill_rate": {"Person": {"name": 0.5}},
