@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from opensanctions_spark.catalog import load, register
 from opensanctions_spark.operators.blocking import (
+    bucket_pairs,
     jaccard_scored_pairs,
     top_k_per_subject,
 )
@@ -63,8 +64,8 @@ def j5_t1_blocking_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard, then row_number keeps top-5 per subject, ties broken by
     candidate id. In-bucket pair expansion is the scale-dominant stage
     (one groupBy(token) shuffle, pairs built JVM-side inside buckets): a
-    document-frequency cap (operators.blocking.candidate_pairs) bounds it
-    to O(buckets × B²)."""
+    document-frequency cap (operators.blocking.top_k_blocked_matches)
+    bounds it to O(buckets × B²)."""
     part = load(spark, sf_dir, "part")
     # compound tokens + per-id counts built row-wise (array_distinct /
     # size before the explode): zero shuffles where a cross-row distinct
@@ -326,18 +327,16 @@ def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     variants. Both engines ship the same built-in, so the oracle is
     exact.
 
-    Pair generation is the chunked-bucket expansion
-    (``operators/blocking.py _chunked_subjects``), NOT a self-equi-join
-    on the block key: the supplier fixture's names share one 9-char
-    prefix, so the join form put EVERY row in one hash partition — a
-    single task serially computing the full n(n-1)/2 distance matrix
-    (profiled: 1 task, 3.2 s of the query's 3.4 s), the single-giant-key
-    shape AQE's skew splitting cannot touch (guide §2.5). The bucket
-    form spreads each block's quadratic work over ceil(B/chunk) tasks;
-    the pair set is identical (ordered i < j positions in the id-sorted
-    member array ≡ a.id < b.id within the block)."""
-    from opensanctions_spark.operators.blocking import _chunked_subjects
-
+    Pair generation is the in-bucket expansion
+    (``operators/blocking.py bucket_pairs``), NOT a self-equi-join on the
+    block key: the supplier fixture's names share one 9-char prefix, so
+    the join form put EVERY row in one hash partition — a single task
+    serially computing the full n(n-1)/2 distance matrix (profiled:
+    1 task, 3.2 s of the query's 3.4 s), the single-giant-key shape AQE's
+    skew splitting cannot touch (guide §2.5). The bucket form spreads
+    each block's quadratic work over ceil(B/chunk) tasks; the pair set is
+    identical (ordered i < j positions in the id-sorted member array ≡
+    a.id < b.id within the block)."""
     sup = load(spark, sf_dir, "supplier")
     names = sup.select(
         F.col("s_suppkey").alias("id"),
@@ -353,26 +352,15 @@ def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.size("members") > 1)
     )
-    subj = _chunked_subjects(buckets, "members", directional=False)
-    x = F.element_at(F.col("members"), F.col("_i") + 1)
-    return (
-        subj.select(
-            x.alias("x"),
-            F.explode(
-                F.slice(
-                    F.col("members"), F.col("_i") + 2, F.size(F.col("members"))
-                )
-            ).alias("y"),
-        )
-        .select(
-            F.col("x.id").alias("left_id"),
-            F.col("y.id").alias("right_id"),
-            F.levenshtein(F.col("x.name"), F.col("y.name"))
-            .cast("long")
-            .alias("dist"),
-        )
-        .filter(F.col("dist") <= 3)
-    )
+    return bucket_pairs(
+        buckets,
+        "members",
+        lambda x, y: F.struct(
+            x["id"].alias("left_id"),
+            y["id"].alias("right_id"),
+            F.levenshtein(x["name"], y["name"]).cast("long").alias("dist"),
+        ),
+    ).filter(F.col("dist") <= 3)
 
 
 @register(

@@ -20,6 +20,7 @@ from opensanctions_spark.functions.text import (
     squash_spaces,
     token_count,
 )
+from opensanctions_spark.operators.blocking import bucket_pairs
 from opensanctions_spark.session import materialize
 
 TOKEN_RE = "[a-z0-9]+"
@@ -332,31 +333,22 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("members")
         )
         .filter(F.size("members") > 1)
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
     )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("members"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("members"), i + 2, F.size(F.col("members"))),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("left_id"),
-                        y["doc_id"].alias("right_id"),
-                        x["n"].alias("na"),
-                        y["n"].alias("nb"),
-                    ),
-                ),
-            )
-        )
+    pairs = bucket_pairs(
+        buckets,
+        "members",
+        lambda x, y: F.struct(
+            x["doc_id"].alias("left_id"),
+            y["doc_id"].alias("right_id"),
+            x["n"].alias("na"),
+            y["n"].alias("nb"),
+        ),
     )
     jac = F.col("shared").cast("double") / (
         F.col("na") + F.col("nb") - F.col("shared")
     ).cast("double")
     return (
-        buckets.select(pair.alias("p"))
-        .select("p.left_id", "p.right_id", "p.na", "p.nb")
-        .groupBy("left_id", "right_id")
+        pairs.groupBy("left_id", "right_id")
         .agg(
             F.count("*").alias("shared"),
             F.first("na").alias("na"),
@@ -461,11 +453,12 @@ def minhash_pairs_of(
     dedup_minhash_lsh for the algorithm notes.
 
     Pair generation is the single-shuffle bucket form: group band rows by
-    (band, value), then expand ordered pairs INSIDE each bucket with JVM
-    array functions (sorted ids + slice — emits exactly n(n-1)/2 structs,
-    no n² intermediate). One shuffle of the 8-rows to the buckets replaces
-    the equi-self-join's two shuffled join inputs; the pair-count groupBy
-    is the same in both forms.
+    (band, value), then expand ordered pairs INSIDE each bucket through
+    ``operators.blocking.bucket_pairs``, whose fixed-width re-spread keeps
+    AQE from packing the quadratic expansion onto a few tasks. One
+    shuffle of the 8-rows to the buckets replaces the equi-self-join's
+    two shuffled join inputs; the pair-count groupBy is the same in both
+    forms.
 
     `max_bucket_size` is the stop-band cap for skewed corpora at scale:
     a band bucket holding more ids than the cap carries no discriminative
@@ -480,45 +473,20 @@ def minhash_pairs_of(
     computes them for the vs-corpus probe; re-deriving them from text
     would tokenize + shingle + hash the wave a second time)."""
     mh = bands if bands is not None else minhash_bands_of(shingles)
-    # The bucket exchange gets an EXPLICIT width (round 14): the in-bucket
-    # pair expansion runs in the SAME stage as the bucket aggregation, and
-    # AQE sizes that stage on the tiny pre-explode band-row bytes — on a
-    # duplicate-dense corpus (sf1: every doc is a 10-way duplicate group)
-    # it coalesced the quadratic expansion onto 2 tasks (10.4 s CPU
-    # serialized, 78 MB of pair rows written from a 2.4 MB input; wall
-    # 8.5 s, half the query). A keyed repartition with a fixed partition
-    # count is one AQE will not coalesce, and the groupBy reuses the
-    # exchange (same keys — no second shuffle, no extra stage; the r13
-    # note here rejected a POST-agg re-spread, which did add one).
-    # collect_list partials don't shrink data, so losing map-side partial
-    # aggregation below the exchange costs nothing.
-    n_spread = int(
-        mh.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
     buckets = (
-        mh.repartition(n_spread, "k", "mh")
-        .groupBy("k", "mh")
+        mh.groupBy("k", "mh")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") > 1)
     )
     if max_bucket_size is not None:
         buckets = buckets.filter(F.size("ids") <= max_bucket_size)
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                    lambda y: F.struct(x.alias("left_id"), y.alias("right_id")),
-                ),
-            )
-        )
+    pairs = bucket_pairs(
+        buckets,
+        "ids",
+        lambda x, y: F.struct(x.alias("left_id"), y.alias("right_id")),
     )
-    return (
-        buckets.select(pair.alias("p"))
-        .select("p.left_id", "p.right_id")
-        .groupBy("left_id", "right_id")
-        .agg(F.count("*").alias("n_bands"))
+    return pairs.groupBy("left_id", "right_id").agg(
+        F.count("*").alias("n_bands")
     )
 
 

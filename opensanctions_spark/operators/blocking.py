@@ -6,13 +6,21 @@ scores each pair, and keeps top-k above a cutoff
 ``zavod/zavod/runner/local_enricher.py:33-121``). The Spark-native shape:
 
 1. tokenize the blocking key (names) → explode → (token, id),
-2. group by token into buckets (ONE shuffle of the token set) and expand
-   candidate pairs inside each bucket with JVM array functions; hot
+2. group by token into buckets (ONE shuffle of the token set); hot
    tokens are the skew hazard, so a per-token document-frequency cap
    drops stopword-ish tokens before bucketing (the analogue of the
    reference's candidate budgets),
-3. score pairs (here: token-overlap Jaccard — pluggable),
+3. expand pairs inside each bucket and score them (here: token-overlap
+   Jaccard — pluggable),
 4. top-k per subject via row_number window, ties broken by candidate id.
+
+Step 3's expansion is ``bucket_pairs``, the ONE in-bucket pair expansion
+of the package: token blocking here, MinHash/LSH band buckets and the
+shingle/prefix blocks in ``catalog``, and edge buckets in
+``operators.edges`` all run through it. It streams a bucket's pairs
+chunk by chunk over a fixed-width re-spread, with three partner forms:
+the later members (ordered i < j pairs), every other member
+(directional pairs) or a second member array (bipartite pairs).
 
 At 100 TB the pair-generation stage dominates; the DF cap bounds each
 token bucket to B ids → ≤ B² pairs per token, making worst-case cost
@@ -23,14 +31,10 @@ once where an equi-self-join would shuffle it twice.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _parallelism(df: DataFrame) -> int:
-    """Target task count for fan-out stages: the session's shuffle
-    partition setting (executor-count × cores on a real cluster)."""
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
 
 
 def _hot_tokens(tokens: DataFrame, max_token_freq: int) -> DataFrame:
@@ -67,58 +71,80 @@ def _drop_hot_tokens(
 _PAIR_CHUNK = 256
 
 
-def _chunked_subjects(
+def bucket_pairs(
     buckets: DataFrame,
     members_col: str,
-    directional: bool,
-    extra_cols: tuple[str, ...] = (),
-    chunk: int = _PAIR_CHUNK,
+    pair: Callable[[Column, Column], Column],
+    partners: str = "later",
 ) -> DataFrame:
-    """One row per SUBJECT position of each bucket (members array riding
-    along) — the streaming replacement for a single
-    ``explode(flatten(transform(members, ...)))`` expansion, whose outer
-    array materializes EVERY pair struct of a bucket as ONE value:
-    O(|bucket|²) bytes in a single allocation. A 5,000-member bucket
-    builds a ~300 MB array before the explode can stream it — observed
-    as a GCLocker retry storm and a near-OOM death spiral on
-    j5_reference_scorer at sf0.1 (293 s for a query whose pair count is
-    ~1.1 B). Here the bucket row explodes into chunk rows (subject
-    positions in strides of ``chunk``), is re-spread, then explodes into
-    per-subject rows; every allocation on the way is O(|bucket|) and the
-    pair structs stream straight into the downstream partial aggregate.
+    """Pair rows from a bucket frame — THE in-bucket pair expansion every
+    blocked-pair family runs through.
 
-    The re-spread moves chunk rows — a B-member bucket ships
-    ceil(B/chunk) copies of its members array (bounded), and in exchange
-    the quadratic expansion is balanced at chunk granularity: one
+    ``buckets`` has one row per bucket with its members in the sorted
+    array ``members_col``; ``pair(x, y)`` builds the output struct from a
+    subject element ``x`` and a partner element ``y``, and its fields are
+    the output columns. ``partners`` picks the partner set of the member
+    at position i:
+
+    - ``"later"``: the members after i — ordered i < j pairs, n(n-1)/2
+      per bucket (the default);
+    - ``"others"``: every member but i — directional pairs, n(n-1);
+    - any other value names a second array column of ``buckets`` —
+      bipartite pairs, |members|·|partners| per bucket.
+
+    Callers drop buckets that cannot pair (fewer than two members, or an
+    empty side) before calling.
+
+    The expansion streams: the bucket row explodes into chunk rows
+    (subject positions in strides of ``_PAIR_CHUNK``), the chunk rows are
+    re-spread round-robin over a FIXED partition count, and each chunk
+    row explodes into one row per subject whose partner array explodes
+    into the pair rows. Every allocation on the way is O(|bucket|) — a
+    single ``explode(flatten(transform(members, ...)))`` builds a
+    bucket's whole pair set as ONE O(|bucket|²) array value (a
+    5,000-member bucket: ~300 MB before the explode streams it, a
+    GCLocker retry storm on j5_reference_scorer at sf0.1) — and one
     mega-bucket spreads over ceil(B/chunk) tasks instead of serializing
-    on a single straggler (the 100 TB skew shape the rehearsal gates).
-    Buckets at or below ``chunk`` members emit exactly one chunk row, so
-    the common small-bucket regime shuffles the same rows as before.
+    on a single straggler. Buckets at or below the chunk size ship
+    exactly one chunk row.
 
-    ``directional=False``: subjects iterate positions 0..size-2 (the
-    ordered i < j pair form); ``True``: 0..size-1 (every member is a
-    subject). Output: ``members_col``, ``extra_cols``, and ``_i`` (the
-    0-based subject position)."""
+    The re-spread is ``repartition(n)`` with n = the session's shuffle
+    partition count: a REPARTITION_BY_NUM exchange, which AQE never
+    coalesces. AQE sizes stages on their input bytes, and the input of
+    the quadratic expansion is tiny — on a duplicate-dense corpus (sf1:
+    every document a 10-way duplicate group) it packed the MinHash
+    expansion of a coalescible exchange onto 2 tasks."""
     size = F.size(members_col)
-    last = size - 1 if directional else size - 2
-    keep = [members_col, *extra_cols]
+    last = size - 2 if partners == "later" else size - 1
+    keep = [members_col]
+    if partners not in ("later", "others"):
+        keep.append(partners)
     starts = buckets.select(
         *keep,
-        F.explode(F.sequence(F.lit(0), last, F.lit(chunk))).alias("_start"),
+        F.explode(F.sequence(F.lit(0), last, F.lit(_PAIR_CHUNK))).alias("_start"),
+    ).repartition(
+        int(buckets.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     )
-    # re-spread the chunk rows (not the bucket rows): AQE sizes the
-    # post-groupBy stage on the tiny pre-explode bytes and would coalesce
-    # the quadratic work onto a handful of tasks
-    starts = starts.repartition(_parallelism(buckets))
-    return starts.select(
+    subjects = starts.select(
         *keep,
         F.explode(
             F.sequence(
                 F.col("_start"),
-                F.least(F.col("_start") + F.lit(chunk - 1), last),
+                F.least(F.col("_start") + F.lit(_PAIR_CHUNK - 1), last),
             )
         ).alias("_i"),
     )
+    members = F.col(members_col)
+    x = F.element_at(members, F.col("_i") + 1)
+    if partners == "later":
+        ys = F.slice(members, F.col("_i") + 2, size)
+    elif partners == "others":
+        ys = F.filter(members, lambda y, j: j != F.col("_i"))
+    else:
+        ys = F.col(partners)
+    return subjects.select(
+        F.explode(F.transform(ys, lambda y: pair(x, y))).alias("p")
+    ).select("p.*")
 
 
 def tokenize(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -151,53 +177,60 @@ def tokenize(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def candidate_pairs(
-    tokens: DataFrame, max_token_freq: int | None = None
-) -> DataFrame:
-    """Directional candidate pairs (subject_id, candidate_id, shared) from a
-    (id, token) frame. Skew guard: tokens appearing in more than
-    `max_token_freq` ids are dropped before the self-join."""
-    t = tokens
+def _counted(tokens: DataFrame) -> DataFrame:
+    """(id, token) rows with the per-id token count ``n_tokens`` — the
+    Jaccard denominator, taken from the unfiltered token set."""
+    if "n_tokens" in tokens.columns:  # precomputed row-wise (see tokenize)
+        return tokens
+    return tokens.withColumn(
+        "n_tokens", F.count("*").over(Window.partitionBy("id"))
+    )
+
+
+def _token_buckets(tokens: DataFrame, max_token_freq: int | None) -> DataFrame:
+    """One row per shared token: its sorted (id, n_tokens) members, hot
+    tokens dropped by the DF cap."""
+    t = _counted(tokens)
     if max_token_freq is not None:
-        t = _drop_hot_tokens(tokens, tokens, max_token_freq)
-    buckets = (
+        t = _drop_hot_tokens(t, tokens, max_token_freq)
+    return (
         t.groupBy("token")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") > 1)
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct(F.col("id"), F.col("n_tokens")))
+            ).alias("members")
+        )
+        .filter(F.size("members") > 1)
     )
-    # ordered (i < j) streaming expansion + mirror AFTER the aggregation:
-    # half the quadratic work and half the pre-agg rows of the old
-    # directional form, with identical directional output (shared counts
-    # are symmetric); see _chunked_subjects for the allocation story.
-    subj = _chunked_subjects(buckets, "ids", directional=False)
-    x = F.element_at(F.col("ids"), F.col("_i") + 1)
-    pair = F.explode(
-        F.transform(
-            F.slice(F.col("ids"), F.col("_i") + 2, F.size("ids")),
-            lambda y: F.struct(x.alias("left_id"), y.alias("right_id")),
+
+
+def _id_pair(a: str, b: str) -> Callable[[Column, Column], Column]:
+    """Pair builder for ``bucket_pairs`` over (id, n_tokens) members:
+    ``{a}_id``, ``{b}_id``, ``{a}_n``, ``{b}_n``."""
+    return lambda x, y: F.struct(
+        x["id"].alias(f"{a}_id"),
+        y["id"].alias(f"{b}_id"),
+        x["n_tokens"].alias(f"{a}_n"),
+        y["n_tokens"].alias(f"{b}_n"),
+    )
+
+
+def _jaccard(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """Shared-token count and Jaccard score per (``{a}_id``, ``{b}_id``)
+    from one row per shared token."""
+    return (
+        pairs.groupBy(f"{a}_id", f"{b}_id")
+        .agg(
+            F.count("*").alias("shared"),
+            F.first(f"{a}_n").alias(f"{a}_n"),
+            F.first(f"{b}_n").alias(f"{b}_n"),
+        )
+        .withColumn(
+            "score",
+            F.col("shared")
+            / (F.col(f"{a}_n") + F.col(f"{b}_n") - F.col("shared")),
         )
     )
-    half = (
-        subj.select(pair.alias("p"))
-        .select("p.left_id", "p.right_id")
-        .groupBy("left_id", "right_id")
-        .agg(F.count("*").alias("shared"))
-    )
-    both = F.explode(
-        F.array(
-            F.struct(
-                F.col("left_id").alias("subject_id"),
-                F.col("right_id").alias("candidate_id"),
-                F.col("shared").alias("shared"),
-            ),
-            F.struct(
-                F.col("right_id").alias("subject_id"),
-                F.col("left_id").alias("candidate_id"),
-                F.col("shared").alias("shared"),
-            ),
-        )
-    )
-    return half.select(both.alias("p")).select("p.*")
 
 
 def jaccard_scored_pairs(tokens: DataFrame, max_token_freq: int | None = None) -> DataFrame:
@@ -220,55 +253,10 @@ def jaccard_scored_pairs(tokens: DataFrame, max_token_freq: int | None = None) -
     relation has already collapsed to one row per pair. Half the quadratic
     expansion and half the pair-shuffle volume of a directional expansion;
     the equi-self-join alternative would shuffle the token set twice."""
-    if "n_tokens" in tokens.columns:
-        t = tokens  # per-id counts precomputed row-wise (see tokenize)
-    else:
-        t = tokens.withColumn(
-            "n_tokens", F.count("*").over(Window.partitionBy("id"))
-        )
-    if max_token_freq is not None:
-        t = _drop_hot_tokens(t, tokens, max_token_freq)
-    buckets = (
-        t.groupBy("token")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("id"), F.col("n_tokens")))
-            ).alias("members")
-        )
-        .filter(F.size("members") > 1)
+    pairs = bucket_pairs(
+        _token_buckets(tokens, max_token_freq), "members", _id_pair("left", "right")
     )
-    # Streaming ordered expansion (see _chunked_subjects): per-subject
-    # rows, O(|bucket|) allocations, chunk-level balance — replaces the
-    # explode(flatten(...)) whose outer array materialized every pair
-    # struct of a bucket as one O(|bucket|²) value.
-    subj = _chunked_subjects(buckets, "members", directional=False)
-    x = F.element_at(F.col("members"), F.col("_i") + 1)
-    pair = F.explode(
-        F.transform(
-            F.slice(F.col("members"), F.col("_i") + 2, F.size("members")),
-            lambda y: F.struct(
-                x["id"].alias("left_id"),
-                y["id"].alias("right_id"),
-                x["n_tokens"].alias("left_n"),
-                y["n_tokens"].alias("right_n"),
-            ),
-        )
-    )
-    half = (
-        subj.select(pair.alias("p"))
-        .select("p.left_id", "p.right_id", "p.left_n", "p.right_n")
-        .groupBy("left_id", "right_id")
-        .agg(
-            F.count("*").alias("shared"),
-            F.first("left_n").alias("left_n"),
-            F.first("right_n").alias("right_n"),
-        )
-        .withColumn(
-            "score",
-            F.col("shared")
-            / (F.col("left_n") + F.col("right_n") - F.col("shared")),
-        )
-    )
+    half = _jaccard(pairs, "left", "right")
     # mirror to the directional view AFTER aggregation, inside one plan
     # (explode of a 2-struct array, map-side) — a union of two selects
     # over `half` would compile to two subplans and recompute the whole
@@ -348,13 +336,6 @@ def bipartite_jaccard_pairs(
     Returns (subject_id, candidate_id, shared, score) with Jaccard over
     the union of both token sets.
     """
-    def _counted(frame: DataFrame) -> DataFrame:
-        if "n_tokens" in frame.columns:  # precomputed row-wise (tokenize)
-            return frame
-        return frame.withColumn(
-            "n_tokens", F.count("*").over(Window.partitionBy("id"))
-        )
-
     s = _counted(subject_tokens).withColumn("side", F.lit("s"))
     t = _counted(target_tokens).withColumn("side", F.lit("t"))
     if max_token_freq is not None:
@@ -365,63 +346,28 @@ def bipartite_jaccard_pairs(
         hot = F.broadcast(_hot_tokens(target_tokens, max_token_freq))
         s = s.join(hot, "token", "left_anti")
         t = t.join(hot, "token", "left_anti")
-    both = s.unionByName(t)
-    buckets = (
-        both.groupBy("token")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.when(
-                        F.col("side") == "s",
-                        F.struct(F.col("id"), F.col("n_tokens")),
-                    )
+
+    def side(tag: str) -> Column:
+        return F.sort_array(
+            F.collect_list(
+                F.when(
+                    F.col("side") == tag,
+                    F.struct(F.col("id"), F.col("n_tokens")),
                 )
-            ).alias("subjects"),
-            F.sort_array(
-                F.collect_list(
-                    F.when(
-                        F.col("side") == "t",
-                        F.struct(F.col("id"), F.col("n_tokens")),
-                    )
-                )
-            ).alias("targets"),
+            )
         )
+
+    buckets = (
+        s.unionByName(t)
+        .groupBy("token")
+        .agg(side("s").alias("subjects"), side("t").alias("targets"))
         .filter((F.size("subjects") > 0) & (F.size("targets") > 0))
     )
-    # streaming |subjects|×|targets| expansion (see _chunked_subjects):
-    # one row per subject position, the targets array riding along — the
-    # old explode(flatten(...)) materialized the full cross product of a
-    # bucket as one O(|subjects|·|targets|) array value
-    subj = _chunked_subjects(
-        buckets, "subjects", directional=True, extra_cols=("targets",)
+    pairs = bucket_pairs(
+        buckets, "subjects", _id_pair("subject", "candidate"), partners="targets"
     )
-    x = F.element_at(F.col("subjects"), F.col("_i") + 1)
-    pair = F.explode(
-        F.transform(
-            F.col("targets"),
-            lambda y: F.struct(
-                x["id"].alias("subject_id"),
-                y["id"].alias("candidate_id"),
-                x["n_tokens"].alias("subject_n"),
-                y["n_tokens"].alias("candidate_n"),
-            ),
-        )
-    )
-    return (
-        subj.select(pair.alias("p"))
-        .select("p.subject_id", "p.candidate_id", "p.subject_n", "p.candidate_n")
-        .groupBy("subject_id", "candidate_id")
-        .agg(
-            F.count("*").alias("shared"),
-            F.first("subject_n").alias("subject_n"),
-            F.first("candidate_n").alias("candidate_n"),
-        )
-        .withColumn(
-            "score",
-            F.col("shared")
-            / (F.col("subject_n") + F.col("candidate_n") - F.col("shared")),
-        )
-        .drop("subject_n", "candidate_n")
+    return _jaccard(pairs, "subject", "candidate").drop(
+        "subject_n", "candidate_n"
     )
 
 
@@ -445,58 +391,16 @@ def top_k_blocked_matches(
     the dominant shuffle; at bench scale it removes one full stage.
     Output: (subject_id, candidate_id, shared, subject_n, candidate_n,
     score, rank ≤ k)."""
-    if "n_tokens" in tokens.columns:
-        t = tokens
-    else:
-        t = tokens.withColumn(
-            "n_tokens", F.count("*").over(Window.partitionBy("id"))
-        )
-    if max_token_freq is not None:
-        t = _drop_hot_tokens(t, tokens, max_token_freq)
-    buckets = (
-        t.groupBy("token")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("id"), F.col("n_tokens")))
-            ).alias("members")
-        )
-        .filter(F.size("members") > 1)
-    )
-    # streaming DIRECTIONAL expansion (see _chunked_subjects): every
-    # member is a subject, its candidates are the other members — both
-    # directions are emitted pre-shuffle by construction so the single
-    # subject-keyed exchange below still serves the agg AND the window
-    subj = _chunked_subjects(buckets, "members", directional=True)
-    x = F.element_at(F.col("members"), F.col("_i") + 1)
-    pair = F.explode(
-        F.transform(
-            F.filter(F.col("members"), lambda y: y["id"] != x["id"]),
-            lambda y: F.struct(
-                x["id"].alias("subject_id"),
-                y["id"].alias("candidate_id"),
-                x["n_tokens"].alias("subject_n"),
-                y["n_tokens"].alias("candidate_n"),
-            ),
-        )
-    )
-    directional = subj.select(pair.alias("p")).select(
-        "p.subject_id", "p.candidate_id", "p.subject_n", "p.candidate_n"
+    # directional pairs: both directions are emitted before the shuffle,
+    # so the single subject-keyed exchange serves the agg AND the window
+    pairs = bucket_pairs(
+        _token_buckets(tokens, max_token_freq),
+        "members",
+        _id_pair("subject", "candidate"),
+        partners="others",
     )
     # THE one exchange: subject-keyed, reused by the agg and the window
-    directional = directional.repartition(F.col("subject_id"))
-    agg = (
-        directional.groupBy("subject_id", "candidate_id")
-        .agg(
-            F.count("*").alias("shared"),
-            F.first("subject_n").alias("subject_n"),
-            F.first("candidate_n").alias("candidate_n"),
-        )
-        .withColumn(
-            "score",
-            F.col("shared")
-            / (F.col("subject_n") + F.col("candidate_n") - F.col("shared")),
-        )
-    )
+    agg = _jaccard(pairs.repartition(F.col("subject_id")), "subject", "candidate")
     w = Window.partitionBy("subject_id").orderBy(
         F.col("score").desc(), F.col("candidate_id").asc()
     )

@@ -15,13 +15,13 @@ schema-declared PROTECTED property conflicts (57-75, 324-422: pairwise
 set intersection over slugified values, empty-as-wildcard).
 
 Spark shape: one groupBy on the bucket key; ordered pair expansion
-inside each bucket (buckets are edges sharing BOTH endpoints — small by
-construction, so the quadratic term is per-bucket); ambiguous-node
-filter and connected components over the compatible pairs; then a
-pairwise-consistency count filter (|compatible pairs in group| ==
-n(n-1)/2, temporal AND protected-prop) before any merge. At 100 TB the
-bucket key carries the shuffle and every later join is on the (tiny)
-pair/group tables.
+inside each bucket (``operators.blocking.bucket_pairs``; buckets are
+edges sharing BOTH endpoints — small by construction, so the quadratic
+term is per-bucket); ambiguous-node filter and connected components
+over the compatible pairs; then a pairwise-consistency count filter
+(|compatible pairs in group| == n(n-1)/2, temporal AND protected-prop)
+before any merge. At 100 TB the bucket key carries the shuffle and
+every later join is on the (tiny) pair/group tables.
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from opensanctions_spark.operators.blocking import bucket_pairs
 from opensanctions_spark.operators.resolve import connected_components
 
 #: partial ISO date shapes the range parser accepts (reference:
@@ -199,38 +200,29 @@ def dedupe_edges(
         .agg(F.sort_array(F.collect_list("m")).alias("members"))
         .filter(F.size("members") > 1)
     )
-    # ordered in-bucket pairs (slice trick — n(n-1)/2, no n² blowup).
-    # compat = temporal; pcompat = protected-prop pairwise set check.
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("members"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("members"), i + 2, F.size(F.col("members"))),
-                    lambda y: F.struct(
-                        x["id"].alias("left_id"),
-                        y["id"].alias("right_id"),
-                        (
-                            _sets_compatible(x["sv"], y["sv"], x["sr"], y["sr"])
-                            & _sets_compatible(x["ev"], y["ev"], x["er"], y["er"])
-                        ).alias("compat"),
-                        F.forall(
-                            F.zip_with(
-                                x["pv"],
-                                y["pv"],
-                                lambda a, b: (F.size(a) == 0)
-                                | (F.size(b) == 0)
-                                | F.arrays_overlap(a, b),
-                            ),
-                            lambda z: z,
-                        ).alias("pcompat"),
-                    ),
+    # ordered in-bucket pairs. compat = temporal; pcompat = protected-prop
+    # pairwise set check.
+    pairs = bucket_pairs(
+        buckets,
+        "members",
+        lambda x, y: F.struct(
+            x["id"].alias("left_id"),
+            y["id"].alias("right_id"),
+            (
+                _sets_compatible(x["sv"], y["sv"], x["sr"], y["sr"])
+                & _sets_compatible(x["ev"], y["ev"], x["er"], y["er"])
+            ).alias("compat"),
+            F.forall(
+                F.zip_with(
+                    x["pv"],
+                    y["pv"],
+                    lambda a, b: (F.size(a) == 0)
+                    | (F.size(b) == 0)
+                    | F.arrays_overlap(a, b),
                 ),
-            )
-        )
-    )
-    pairs = buckets.select(pair.alias("p")).select(
-        "p.left_id", "p.right_id", "p.compat", "p.pcompat"
+                lambda z: z,
+            ).alias("pcompat"),
+        ),
     )
     from pyspark.storagelevel import StorageLevel
 

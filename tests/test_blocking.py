@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
+
 from opensanctions_spark.operators.blocking import (
-    candidate_pairs,
+    _PAIR_CHUNK,
+    bucket_pairs,
     jaccard_scored_pairs,
     tokenize,
     top_k_per_subject,
@@ -16,7 +20,7 @@ def test_tokenize_lowercase_distinct(spark):
     assert toks == {"acme", "corp"}
 
 
-def test_candidate_pairs_shared_counts(spark):
+def test_jaccard_pairs_shared_counts(spark):
     df = spark.createDataFrame(
         [(1, "john smith"), (2, "john q smith"), (3, "alice jones")],
         ["id", "name"],
@@ -24,7 +28,7 @@ def test_candidate_pairs_shared_counts(spark):
     toks = tokenize(df, "id", "name")
     pairs = {
         (r["subject_id"], r["candidate_id"]): r["shared"]
-        for r in candidate_pairs(toks).collect()
+        for r in jaccard_scored_pairs(toks).collect()
     }
     assert pairs[(1, 2)] == 2 and pairs[(2, 1)] == 2
     assert (1, 3) not in pairs
@@ -36,8 +40,59 @@ def test_token_frequency_cap_drops_stopwords(spark):
         [(1, "acme inc"), (2, "zeta inc"), (3, "gamma inc")], ["id", "name"]
     )
     toks = tokenize(df, "id", "name")
-    assert candidate_pairs(toks, max_token_freq=2).count() == 0
-    assert candidate_pairs(toks).count() == 6
+    assert jaccard_scored_pairs(toks, max_token_freq=2).count() == 0
+    assert jaccard_scored_pairs(toks).count() == 6
+
+
+# one bucket wider than two pair chunks, so subject positions cross both
+# chunk boundaries, plus small buckets that fit in one chunk
+_WIDE = list(range(600))
+_BUCKETS = [_WIDE, [1000, 1001], [2000, 2001, 2002], list(range(3000, 3006))]
+
+
+@pytest.mark.parametrize("partners", ["later", "others", "targets"])
+def test_bucket_pairs_across_chunk_boundaries(spark, partners):
+    """bucket_pairs emits each bucket's pairs exactly once across chunk
+    boundaries: n(n-1)/2 ordered pairs, n(n-1) directional pairs or
+    |S|·|T| bipartite pairs per bucket, as plain Python counts them."""
+    assert len(_WIDE) > 2 * _PAIR_CHUNK
+    rows = [(ids, [-1 - i for i in range(len(ids) % 5 + 2)]) for ids in _BUCKETS]
+    buckets = spark.createDataFrame(
+        rows, "members array<long>, targets array<long>"
+    )
+    pairs = bucket_pairs(
+        buckets,
+        "members",
+        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
+        partners=partners,
+    )
+    got = sorted((r["a"], r["b"]) for r in pairs.collect())
+    want = []
+    for ids, targets in rows:
+        n = len(ids)
+        if partners == "later":
+            want += [(ids[i], ids[j]) for i in range(n) for j in range(i + 1, n)]
+        elif partners == "others":
+            want += [(ids[i], ids[j]) for i in range(n) for j in range(n) if i != j]
+        else:
+            want += [(a, b) for a in ids for b in targets]
+    assert got == sorted(want)
+
+
+def test_minhash_stop_band_cap_drops_wide_bucket(spark):
+    """max_bucket_size drops a band bucket wider than the cap — the wide
+    bucket of the chunk-boundary test — and keeps the small ones."""
+    from opensanctions_spark.catalog.text import minhash_pairs_of
+
+    bands = spark.createDataFrame(
+        [(d, 0, 1) for d in _WIDE]
+        + [(1000, 0, 2), (1001, 0, 2), (1000, 1, 3), (1001, 1, 3)],
+        "doc_id long, k long, mh long",
+    )
+    uncapped = minhash_pairs_of(None, bands=bands)
+    assert uncapped.count() == len(_WIDE) * (len(_WIDE) - 1) // 2 + 1
+    capped = minhash_pairs_of(None, max_bucket_size=len(_WIDE) - 1, bands=bands)
+    assert [tuple(r) for r in capped.collect()] == [(1000, 1001, 2)]
 
 
 def test_top_k_deterministic_ties(spark):

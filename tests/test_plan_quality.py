@@ -419,14 +419,36 @@ def test_dedup_fast_plan_is_one_bucket_shuffle(spark, sf_dir):
     assert n <= 1, f"expected at most 1 exchange, saw {n}"
 
 
-def test_minhash_bucket_expansion_has_no_respread_exchange(spark, sf_dir):
-    """LSH band buckets are collision-sized: expansion work tracks bucket
-    bytes, so AQE's byte sizing is a faithful proxy and the only
-    RoundRobin exchange in the plan is the documents-scan spread. (Token
-    blocking keeps its explicit re-spread — the opposite regime.)"""
-    plan = _executed_plan(QUERIES["dedup_minhash_lsh"](spark, sf_dir))
-    n = plan.count("Exchange RoundRobinPartitioning")
-    assert n == 1, f"expected 1 RoundRobin exchange (doc scan spread), saw {n}"
+def test_pair_expansion_reads_fixed_width_respread(spark, sf_dir):
+    """Every blocked-pair family explodes its pair rows in a stage that
+    reads the fixed-width round-robin re-spread of ``bucket_pairs``:
+    ``Exchange RoundRobinPartitioning(<shuffle partitions>)``, origin
+    REPARTITION_BY_NUM, which AQE never coalesces — AQE sizes a stage on
+    its input bytes, and the input of the quadratic expansion is tiny
+    (sf1: the MinHash expansion was packed onto 2 tasks). No
+    AQEShuffleRead may sit between the exchange and the expansion."""
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    respread = f"Exchange RoundRobinPartitioning({width}), REPARTITION_BY_NUM"
+    for name in (
+        "dedup_minhash_lsh",
+        "dedup_ngram_jaccard",
+        "dedup_fuzzy_levenshtein",
+        "j7_edge_dedupe_merge",
+        "j5_t1_blocking_topk",
+    ):
+        lines = _executed_plan(QUERIES[name](spark, sf_dir)).splitlines()
+        # the per-subject explode (output _i) sits right under the pair
+        # explode, in the same stage
+        subjects = [
+            i
+            for i, line in enumerate(lines)
+            if "Generate explode(sequence(_start" in line
+        ]
+        assert subjects, f"{name}: no bucket_pairs expansion in the plan"
+        for i in subjects:
+            assert "Generate explode(transform(" in lines[i - 1], (name, lines[i - 1])
+            assert "ShuffleQueryStage" in lines[i + 1], (name, lines[i + 1])
+            assert respread in lines[i + 2], (name, lines[i + 2])
 
 
 def test_j5_fused_topk_single_pair_exchange(spark, sf_dir):
@@ -446,7 +468,6 @@ def test_blocking_skew_cap_broadcasts_hot_side_only(spark, sf_dir):
     in a capped blocking plan must therefore be LeftAnti."""
     from opensanctions_spark.operators.blocking import (
         bipartite_jaccard_pairs,
-        candidate_pairs,
         jaccard_scored_pairs,
         tokenize,
         top_k_blocked_matches,
@@ -455,7 +476,6 @@ def test_blocking_skew_cap_broadcasts_hot_side_only(spark, sf_dir):
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     tokens = tokenize(cust.limit(200), "c_custkey", "c_name")
     plans = [
-        _executed_plan(candidate_pairs(tokens, max_token_freq=50)),
         _executed_plan(jaccard_scored_pairs(tokens, max_token_freq=50)),
         _executed_plan(top_k_blocked_matches(tokens, k=3, max_token_freq=50)),
         _executed_plan(

@@ -144,18 +144,18 @@ def test_collapse_undirected_edges_canonicalizes_endpoints(spark, edges):
         max_size=16,
     )
 )
-def test_candidate_pairs_match_python_reference(spark, rows):
+def test_jaccard_pairs_match_python_reference(spark, rows):
     """The in-bucket pair expansion must emit exactly the directional
     pairs (with shared-token counts) that a naive per-token join would."""
     from collections import Counter
 
-    from opensanctions_spark.operators.blocking import candidate_pairs
+    from opensanctions_spark.operators.blocking import jaccard_scored_pairs
 
     uniq = sorted(set(rows))
     df = spark.createDataFrame(uniq, "id LONG, token STRING")
     got = {
         (r["subject_id"], r["candidate_id"]): r["shared"]
-        for r in candidate_pairs(df).collect()
+        for r in jaccard_scored_pairs(df).collect()
     }
     want: Counter = Counter()
     by_token: dict = {}

@@ -1,50 +1,13 @@
-"""Production ANN scoring path (functions/vector_math.py + the _fast
-catalog queries): the BLAS-batched scorer must agree with the
-oracle-deterministic HOF fold modulo nano-unit quantization, and the
-per-batch top-k must survive partitioning."""
+"""Production ANN scoring path (the _fast catalog queries, scoring
+through mapInPandas / applyInPandas): the BLAS-batched scorers must
+agree with their oracle-deterministic HOF-fold twins, and the per-batch
+top-k must survive partitioning."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from opensanctions_spark.catalog import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_dot_fast_matches_hof_fold(spark):
-    from opensanctions_spark.catalog.vectors import dot
-    from opensanctions_spark.functions.vector_math import dot_fast
-
-    df = spark.range(200).select(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(32)),
-            lambda i: F.pmod(F.xxhash64(F.col("id"), i), F.lit(100)) / 50.0,
-        ).alias("a"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(32)),
-            lambda i: F.pmod(F.xxhash64(i, F.col("id")), F.lit(100)) / 50.0,
-        ).alias("b"),
-    )
-    got = df.select(
-        (F.abs(dot(F.col("a"), F.col("b")) - dot_fast(F.col("a"), F.col("b")))
-         < 1e-9).alias("ok")
-    )
-    assert got.filter(~F.col("ok")).count() == 0
-
-
-def test_cosine_fast_range(spark):
-    from opensanctions_spark.functions.vector_math import cosine_fast
-
-    df = spark.createDataFrame(
-        [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0]),
-         ([1.0, 1.0], [-1.0, -1.0])],
-        "a array<double>, b array<double>",
-    )
-    vals = [r[0] for r in df.select(cosine_fast(F.col("a"), F.col("b"))).collect()]
-    assert abs(vals[0] - 1.0) < 1e-12
-    assert abs(vals[1]) < 1e-12
-    assert abs(vals[2] + 1.0) < 1e-12
 
 
 def test_ann_fast_agrees_with_oracle_twin(spark):

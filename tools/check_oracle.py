@@ -14,24 +14,13 @@ import os
 import sys
 import time
 
-import duckdb
-import pandas as pd
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def canonicalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    df = df.sort_values(by=list(df.columns), ignore_index=True)
-    return df
+from opensanctions_spark.testing import (  # noqa: E402
+    canonicalize,  # noqa: F401  (re-exported: perfbench/reference.py)
+    compare_frames,
+    duckdb_with_views,
+)
 
 
 def main() -> int:
@@ -42,11 +31,7 @@ def main() -> int:
     from opensanctions_spark.session import get_session
 
     spark = get_session("check-oracle")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = duckdb_with_views(sf_dir)
 
     qs = e.queries()
     oracles = e.oracle_sql()
@@ -73,25 +58,14 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: duckdb error: {ex}")
             continue
-        s, o = canonicalize(spark_df), canonicalize(oracle_df)
-        if list(s.columns) != list(o.columns):
+        problems = compare_frames(spark_df, oracle_df)
+        if problems:
             failures.append(name)
-            print(f"FAIL  {name}: columns {list(s.columns)} != {list(o.columns)}")
+            print(f"FAIL  {name}: {problems[0]}")
+            for p in problems[1:3]:
+                print(f"      {p}")
             continue
-        if len(s) != len(o):
-            failures.append(name)
-            print(f"FAIL  {name}: rows {len(s)} != {len(o)}")
-            continue
-        if not s.equals(o):
-            neq = (s != o) & ~(s.isna() & o.isna())
-            bad_cols = [c for c in s.columns if neq[c].any()]
-            failures.append(name)
-            print(f"FAIL  {name}: values differ in {bad_cols}")
-            for c in bad_cols[:2]:
-                idx = neq[c].idxmax()
-                print(f"      {c}[{idx}]: spark={s[c][idx]!r} oracle={o[c][idx]!r}")
-            continue
-        print(f"ok    {name}: rows={len(s)} [{time.time()-t0:.1f}s]")
+        print(f"ok    {name}: rows={len(spark_df)} [{time.time()-t0:.1f}s]")
 
     missing = sorted(only - set(qs)) if only else []
     for name in missing:

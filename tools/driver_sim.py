@@ -17,22 +17,9 @@ import os
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def canonicalize(df):
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns), ignore_index=True)
+from opensanctions_spark.testing import compare_frames, duckdb_with_views  # noqa: E402
 
 
 def main() -> int:
@@ -46,9 +33,7 @@ def main() -> int:
 
     import __spark_entry__ as e
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duckdb_with_views(sf_dir)
 
     qs = e.queries()
     oracles = e.oracle_sql()
@@ -57,12 +42,9 @@ def main() -> int:
     for i, (name, fn) in enumerate(list(qs.items())[:first_n]):
         t0 = time.time()
         try:
-            s = canonicalize(fn(spark, sf_dir).toPandas())
-            o = canonicalize(con.sql(oracles[name]).df()) if name in oracles else None
-            ok = o is None or (
-                list(s.columns) == list(o.columns)
-                and len(s) == len(o)
-                and s.equals(o)
+            s = fn(spark, sf_dir).toPandas()
+            ok = name not in oracles or not compare_frames(
+                s, con.sql(oracles[name]).df()
             )
         except Exception as ex:
             ok = False
