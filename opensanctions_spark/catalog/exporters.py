@@ -22,7 +22,6 @@ from opensanctions_spark.exporters import (
     securities_export,
     senzing_records,
     simple_csv_fused,
-    statistics_facets,
     statistics_facets_grouped,
 )
 from opensanctions_spark.model.melt import finish_statements
@@ -252,9 +251,11 @@ SELECT 'total', 'entities', COUNT(*) FROM ents
 def k7_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """statistics.json sink (K7/A2,
     ``zavod/zavod/exporters/statistics.py:73-170``): exact facet counts by
-    schema / country / target + grand total, one unioned long table."""
+    schema / country / target + grand total, one long table from the
+    single GROUPING SETS facet aggregation (``statistics_facets_grouped``,
+    shared with ``a2_facets_grouping_sets``)."""
     entities = _export_entities(spark, sf_dir)
-    return statistics_facets(entities)
+    return statistics_facets_grouped(entities)
 
 
 @register(
@@ -286,10 +287,11 @@ WHERE NOT (g_country = 0 AND country IS NULL)
 """,
 )
 def a2_facets_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass facet family (A2/K7): same counts as ``k7_statistics`` but
-    every facet computed in a single Expand + one aggregation shuffle via
-    GROUPING SETS, instead of one groupBy pass per facet (SURVEY §2.4's
+    """One-pass facet family (A2/K7): every facet computed in a single
+    Expand + one aggregation shuffle via GROUPING SETS (SURVEY §2.4's
     optional fusion of ``zavod/zavod/exporters/statistics.py:93-126``).
+    The Spark side is the same as ``k7_statistics``; only the oracle
+    differs (GROUPING SETS here, a union of GROUP BYs there).
     The oracle counts rows because each fixture entity carries exactly one
     country; the Spark side stays correct for multi-valued countries via
     the first-row marker (see ``statistics_facets_grouped``)."""

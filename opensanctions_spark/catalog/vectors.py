@@ -613,28 +613,31 @@ def ann_centroid_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_CLUSTERS = 8  # k for the trained-loop query
 
 
-#: |q| bound for the packed arg-min trick (``_argmin_code``,
-#: ``ann_kmeans_loop``): with |q| ≤ 2·10⁶ the squared distance over 64
-#: dims is ≤ 64·(2·2·10⁶)² ≈ 10¹⁵, so ``dist·16 + code`` stays far
-#: inside int64 and the packing is exactly order-preserving. Inputs
-#: outside ±2.0 would silently wrap — fail loudly instead.
-_Q_BOUND = 2_000_000
+#: |embedding value| bound for the packed arg-min trick
+#: (``_argmin_code``, ``ann_kmeans_loop``): with |x| ≤ 2.0 the micro-unit
+#: coordinate has |q| ≤ 2·10⁶, the squared distance over 64 dims is
+#: ≤ 64·(2·2·10⁶)² ≈ 10¹⁵, so ``dist·16 + code`` stays far inside int64
+#: and the packing is exactly order-preserving. Inputs outside ±2.0
+#: would silently wrap — fail loudly instead.
+_X_BOUND = 2.0
 
 
 def _quantized_dims(emb_df, id_col: str = "vec_id"):
     """(id, dim, q) integer micro-unit coordinates — the exact-arithmetic
     substrate every cross-engine vector query shares. Coordinates beyond
-    the packed-argmin domain (|embedding value| > 2.0) raise instead of
-    silently overflowing downstream ``min(dist*16+code)`` packings."""
-    q = F.floor(F.col("x").cast("double") * 1000000).cast("long")
-    guarded = F.when(F.abs(q) <= F.lit(_Q_BOUND), q).otherwise(
+    the packed-argmin domain (|embedding value| > 2.0, checked on the
+    raw value) raise instead of silently overflowing downstream
+    ``min(dist*16+code)`` packings."""
+    x = F.col("x").cast("double")
+    q = F.floor(x * 1000000).cast("long")
+    guarded = F.when(F.abs(x) <= F.lit(_X_BOUND), q).otherwise(
         F.raise_error(
             F.concat(
                 F.lit(
                     "embedding coordinate outside the exact packed-argmin"
-                    " domain (|value| > 2.0): q="
+                    " domain (|value| > 2.0): value="
                 ),
-                q.cast("string"),
+                x.cast("string"),
             )
         )
     )

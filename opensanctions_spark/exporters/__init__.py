@@ -34,7 +34,6 @@ from opensanctions_spark.model.registry import (
     RISK_TOPICS,
     common_schema_rank_column,
 )
-from opensanctions_spark.session import materialize
 
 MATCHABLE_SCHEMATA = ["Person", "Company", "Organization", "LegalEntity", "Vessel", "PublicBody"]
 
@@ -434,63 +433,19 @@ def entity_countries(props) -> "F.Column":
     )
 
 
-def _is_thing() -> "F.Column":
-    from opensanctions_spark.exporters.metadata import THING_SCHEMATA
-
-    return F.col("schema").isin(THING_SCHEMATA)
-
-
-def statistics_facets(entities: DataFrame) -> DataFrame:
-    """Long facet table (facet, value, n) — schema counts, country counts,
-    target counts and the grand total, each an exact groupBy().count().
-    The country facet is the reference's ``thing_countries``: distinct
-    country-typed values per entity, Thing-subtree entities only
-    (``statistics.py:106-110``).
-
-    Round 13: ``base`` — the NARROW per-entity facet projection (schema,
-    countries, target) — is lazily localCheckpoint-ed before fanning out
-    to the four facet branches. Without the cut every branch re-embeds
-    the whole entity-assembly pipeline (16 parquet scans in one plan, the
-    assembly exchange re-read four times); with it the assembly runs once
-    and the branches aggregate cached narrow rows. At 100 TB this is one
-    pass over the entity view instead of four."""
-    props = F.col("properties")
-    base = entities.select(
-        "canonical_id",
-        "schema",
-        F.when(_is_thing(), entity_countries(props))
-        .otherwise(F.array())
-        .alias("countries"),
-        target_flag(props).alias("target"),
-    ).transform(materialize, eager=False)
-    by_schema = base.groupBy(F.col("schema").alias("value")).agg(
-        F.count("*").alias("n")
-    ).select(F.lit("schema").alias("facet"), "value", "n")
-    by_country = (
-        base.select(F.explode("countries").alias("value"))
-        .groupBy("value")
-        .agg(F.count("*").alias("n"))
-        .select(F.lit("country").alias("facet"), "value", "n")
-    )
-    by_target = base.groupBy(F.col("target").cast("string").alias("value")).agg(
-        F.count("*").alias("n")
-    ).select(F.lit("target").alias("facet"), "value", "n")
-    total = base.agg(F.count("*").alias("n")).select(
-        F.lit("total").alias("facet"), F.lit("entities").alias("value"), "n"
-    )
-    return by_schema.unionByName(by_country).unionByName(by_target).unionByName(total)
-
-
 def statistics_facets_grouped(entities: DataFrame) -> DataFrame:
-    """One-pass statistics facets (K7/A2) via GROUPING SETS.
+    """Long statistics facet table (facet, value, n) for K7/A2, via
+    GROUPING SETS: schema counts, country counts, target counts and the
+    grand total. The country facet is the reference's
+    ``thing_countries``: distinct country-typed values per entity,
+    Thing-subtree entities only (``statistics.py:106-110``).
 
-    Same (facet, value, n) contract as :func:`statistics_facets`, but the
-    schema / country / target / total facets come out of a SINGLE
-    aggregation — one Expand node feeding one shuffle — instead of one
-    groupBy scan per facet. At 100 TB this is the difference between one
-    pass over the entity view and four (SURVEY §2.4 flags this fusion as
-    the Spark-native upgrade over
-    ``zavod/zavod/exporters/statistics.py:93-126``, which loops per facet).
+    Every facet comes out of a SINGLE aggregation — one Expand node
+    feeding one shuffle — instead of one groupBy scan per facet. At
+    100 TB this is the difference between one pass over the entity view
+    and four (SURVEY §2.4 flags this fusion as the Spark-native upgrade
+    over ``zavod/zavod/exporters/statistics.py:93-126``, which loops per
+    facet).
 
     Countries are multi-valued, so the frame is exploded once
     (``posexplode_outer``) and a first-row marker keeps the entity-level
@@ -499,6 +454,8 @@ def statistics_facets_grouped(entities: DataFrame) -> DataFrame:
     as a NULL country row, which the country facet drops — disambiguated
     from the grouping-set placeholder NULL via ``grouping()``.
     """
+    from opensanctions_spark.exporters.metadata import THING_SCHEMATA
+
     props = F.col("properties")
     base = entities.select(
         "schema",
@@ -507,7 +464,8 @@ def statistics_facets_grouped(entities: DataFrame) -> DataFrame:
         # country-typed props, distinct per entity, Things only — a
         # non-Thing explodes to one NULL row (is_first still marks it)
         F.posexplode_outer(
-            F.when(_is_thing(), entity_countries(props)).otherwise(F.array())
+            F.when(F.col("schema").isin(THING_SCHEMATA), entity_countries(props))
+            .otherwise(F.array())
         ).alias("pos", "country"),
     ).select(
         "schema",

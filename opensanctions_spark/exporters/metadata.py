@@ -16,13 +16,15 @@ test pins field-by-field
   per-country and per-schema facets, per-(schema, property) fill
   counts, sanctions program counts.
 
-Spark shape: every facet is a bounded groupBy over the already-persisted
-entity view (cardinality = schemata × countries × properties, never row
-count), collected once. Facet labels/captions resolve through the
-engine's presentation registry (``model/registry.py`` SCHEMA_LABELS /
-COUNTRY_CAPTIONS — the FtM-model lookup of
-``zavod/zavod/exporters/statistics.py:11-35``), falling back to the raw
-code for unregistered values exactly like the reference's registry.
+Spark shape: every facet comes out of ONE bounded aggregation over the
+already-persisted entity view (``_facet_counts``: cardinality =
+schemata × countries × properties, never row count), collected once;
+the run's assertion check reads the same rows. Facet labels/captions
+resolve through the engine's presentation registry
+(``model/registry.py`` SCHEMA_LABELS / COUNTRY_CAPTIONS — the FtM-model
+lookup of ``zavod/zavod/exporters/statistics.py:11-35``), falling back
+to the raw code for unregistered values exactly like the reference's
+registry.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ import json
 import os
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from opensanctions_spark.logs import get_logger
@@ -80,143 +82,137 @@ def _facet_list(
     return out
 
 
-def dataset_statistics(entities: DataFrame) -> dict[str, Any]:
-    """The reference ``statistics.json`` object, computed distributed.
+def _facet_counts(entities: DataFrame) -> DataFrame:
+    """Every entity-statistics facet of one view in ONE aggregation.
 
-    Three bounded aggregations over the entity view: (schema, target)
-    counts; per-country thing/target counts; per-(schema, property)
-    entity counts. All collects are facet-cardinality-sized."""
-    from opensanctions_spark.exporters import prop_values, target_flag
+    Each entity becomes an array of facet structs — one ``entity`` row
+    keyed by schema, one ``country`` row per ``entity.countries`` value,
+    one ``prop`` row per property with a NON-EMPTY value array, one
+    ``program`` row per ``programId`` of a Sanction — exploded and
+    counted by (kind, schema, key): ``n`` rows, ``n_target`` target
+    rows, ``n_thing`` Thing-subtree rows and the latest ``last_change``
+    (entity rows only). ``statistics.json`` and the run's assertion
+    check both read these rows; the output is bounded by schemata ×
+    countries × properties, never by row count."""
+    from opensanctions_spark.exporters import (
+        entity_countries,
+        prop_values,
+        target_flag,
+    )
 
-    is_thing = F.col("schema").isin(THING_SCHEMATA)
+    props = F.col("properties")
+    schema = F.col("schema")
+    none = F.lit(None).cast("string")
     # the reference's entity.last_change; this engine carries it as the
     # per-entity last_seen rollup (A6), with the modifiedAt property as
     # the fallback for views without the timestamp columns
     changed = (
-        F.array(F.col("last_seen"))
+        F.col("last_seen")
         if "last_seen" in entities.columns
-        else prop_values(F.col("properties"), "modifiedAt")
+        else F.array_max(prop_values(props, "modifiedAt"))
     )
-    from opensanctions_spark.exporters import entity_countries
 
-    base = entities.select(
-        "schema",
-        target_flag(F.col("properties")).alias("target"),
-        is_thing.alias("is_thing"),
+    def facet(kind: str, of_schema: Column, key: Column, last_change: Column = none):
+        return F.struct(
+            F.lit(kind).alias("kind"),
+            of_schema.alias("schema"),
+            key.alias("key"),
+            last_change.alias("last_change"),
+        )
+
+    facets = F.concat(
+        F.array(facet("entity", schema, none, changed)),
         # entity.countries — all country-typed props, distinct per
         # entity (statistics.py:109,119 iterates exactly this set for
         # both thing_countries and target_countries)
-        entity_countries(F.col("properties")).alias("countries"),
-        F.map_keys(F.col("properties")).alias("props"),
-        changed.alias("changed"),
+        F.transform(entity_countries(props), lambda c: facet("country", none, c)),
+        F.transform(
+            F.map_keys(F.map_filter(props, lambda k, v: F.size(v) > 0)),
+            lambda p: facet("prop", schema, p),
+        ),
+        F.transform(
+            F.when(schema == "Sanction", prop_values(props, "programId"))
+            .otherwise(F.array().cast("array<string>")),
+            lambda p: facet("program", none, p),
+        ),
     )
-
-    by_schema = base.groupBy("schema", "target", "is_thing").agg(
-        F.count("*").alias("n"),
-        F.max(F.array_max("changed")).alias("last_change"),
-    ).collect()
-
-    by_country = (
-        base.select(
-            "target", "is_thing", F.explode("countries").alias("country")
+    return (
+        entities.select(
+            target_flag(props).cast("long").alias("target"),
+            schema.isin(THING_SCHEMATA).cast("long").alias("thing"),
+            F.explode(facets).alias("f"),
         )
-        .groupBy("country")
+        .groupBy("f.kind", "f.schema", "f.key")
         .agg(
-            F.sum(F.col("is_thing").cast("long")).alias("n_thing"),
-            F.sum(F.col("target").cast("long")).alias("n_target"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum("target").alias("n_target"),
+            F.sum("thing").alias("n_thing"),
+            F.max("f.last_change").alias("last_change"),
         )
-        .collect()
     )
 
-    by_prop = (
-        base.select("schema", F.explode("props").alias("prop"))
-        .groupBy("schema", "prop")
-        .agg(F.count("*").alias("n"))
-        .collect()
+
+def dataset_statistics(entities: DataFrame) -> dict[str, Any]:
+    """The reference ``statistics.json`` object, computed distributed.
+
+    One bounded aggregation over the entity view (:func:`_facet_counts`),
+    collected once: per-schema entity/target/thing counts, per-country
+    thing/target counts, per-(schema, property) entity counts and
+    sanctions program counts."""
+    rows: dict[str, list] = {"entity": [], "country": [], "prop": [], "program": []}
+    for r in _facet_counts(entities).collect():
+        rows[r["kind"]].append(r)
+    by_schema, by_country = rows["entity"], rows["country"]
+    schema_counts = {r["schema"]: r["n"] for r in by_schema}
+    target_count = sum(r["n_target"] for r in by_schema)
+    thing_count = sum(r["n_thing"] for r in by_schema)
+    last_change = max(
+        (r["last_change"] for r in by_schema if r["last_change"] is not None),
+        default=None,
     )
-
-    programs = (
-        entities.filter(F.col("schema") == "Sanction")
-        .select(
-            F.explode(
-                prop_values(F.col("properties"), "programId")
-            ).alias("program")
-        )
-        .groupBy("program")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-
-    entity_count = sum(r["n"] for r in by_schema)
-    target_count = sum(r["n"] for r in by_schema if r["target"])
-    thing_count = sum(r["n"] for r in by_schema if r["is_thing"])
-    schema_counts: dict[str, int] = {}
-    target_schemata: dict[str, int] = {}
-    thing_schemata: dict[str, int] = {}
-    last_change: str | None = None
-    for r in by_schema:
-        schema_counts[r["schema"]] = schema_counts.get(r["schema"], 0) + r["n"]
-        if r["target"]:
-            target_schemata[r["schema"]] = (
-                target_schemata.get(r["schema"], 0) + r["n"]
-            )
-        if r["is_thing"]:
-            thing_schemata[r["schema"]] = (
-                thing_schemata.get(r["schema"], 0) + r["n"]
-            )
-        if r["last_change"] is not None:
-            last_change = (
-                r["last_change"]
-                if last_change is None
-                else max(last_change, r["last_change"])
-            )
-
+    by_prop = sorted(rows["prop"], key=lambda r: (r["schema"], r["key"]))
     entities_with_prop = [
         {
             "schema": r["schema"],
-            "property": r["prop"],
+            "property": r["key"],
             "count": r["n"],
-            "total": schema_counts.get(r["schema"], 0),
-            "fill_rate": (
-                r["n"] / schema_counts[r["schema"]]
-                if schema_counts.get(r["schema"])
-                else 0.0
-            ),
+            "total": schema_counts[r["schema"]],
+            "fill_rate": r["n"] / schema_counts[r["schema"]],
         }
-        for r in sorted(by_prop, key=lambda r: (r["schema"], r["prop"]))
+        for r in by_prop
     ]
 
     return {
         "last_change": last_change,
         "schemata": sorted(schema_counts),
-        "properties": sorted(
-            {f"{r['schema']}:{r['prop']}" for r in by_prop}
-        ),
-        "entity_count": entity_count,
+        "properties": sorted(f"{r['schema']}:{r['key']}" for r in by_prop),
+        "entity_count": sum(schema_counts.values()),
         "target_count": target_count,
         "targets": {
             "total": target_count,
             "countries": _facet_list(
-                [(r["country"], r["n_target"]) for r in by_country
-                 if r["n_target"]],
+                [(r["key"], r["n_target"]) for r in by_country if r["n_target"]],
                 key="code",
             ),
-            "schemata": _facet_list(sorted(target_schemata.items())),
+            "schemata": _facet_list(
+                [(r["schema"], r["n_target"]) for r in by_schema if r["n_target"]]
+            ),
         },
         "sanctions": {
             "programs": [
-                {"id": r["program"], "count": r["n"]}
-                for r in sorted(programs, key=lambda r: r["program"])
+                {"id": r["key"], "count": r["n"]}
+                for r in sorted(rows["program"], key=lambda r: r["key"])
             ]
         },
         "things": {
             "total": thing_count,
             "countries": _facet_list(
-                [(r["country"], r["n_thing"]) for r in by_country
-                 if r["n_thing"]],
+                [(r["key"], r["n_thing"]) for r in by_country if r["n_thing"]],
                 key="code",
             ),
-            "schemata": _facet_list(sorted(thing_schemata.items())),
+            "schemata": _facet_list(
+                [(r["schema"], r["n_thing"]) for r in by_schema if r["n_thing"]]
+            ),
             "entities_with_prop": entities_with_prop,
         },
     }

@@ -10,8 +10,9 @@ steps, each implemented once:
   last SUCCESSFUL version (J1, ``zavod/zavod/runtime/timestamps.py``);
 - **entity view** (``_entity_view``): read one archived version back and
   assemble it (A1) — persisted once for every consumer;
-- **check** (``_check``): one GROUPING SETS pass for entity/target/schema
-  counts, the extended metrics the assertions need, and the threshold
+- **check** (``_check``): the one facet aggregation ``statistics.json``
+  is built from, over the raw view, for every assertion metric
+  (entity/target/schema, country, property fill), and the threshold
   checks with fatal-min semantics (A12,
   ``zavod/zavod/validators/assertions.py:24-183``);
 - **delta** (``_delta``): ADD/MOD/DEL vs a previous version (D0/D1),
@@ -255,89 +256,6 @@ def dangling_references(entities: DataFrame) -> DataFrame:
     )
 
 
-def _extended_stats(
-    entities: DataFrame, assertions: list[Assertion]
-) -> dict[str, float]:
-    """Extra assertion metrics, computed ONLY when some assertion needs
-    them (the base GROUPING SETS pass covers entity/target/schema):
-
-    - ``country:<code>`` / ``countries``: one explode + groupBy over the
-      country property — output bounded by the country vocabulary,
-    - ``prop:<S>.<p>`` / ``fill:<S>.<p>``: per-schema filled-counts for
-      every asserted (schema, property) pair in ONE aggregation — one
-      flag column per pair, output bounded by the schemata.
-
-    Both are single-pass aggregations over the already-persisted entity
-    view, mirroring the reference's Statistics observer
-    (``zavod/zavod/validators/assertions.py`` stats shapes)."""
-    out: dict[str, float] = {}
-    need_country = any(
-        a.metric == "countries" or a.metric.startswith("country:")
-        for a in assertions
-    )
-    pairs = sorted(
-        {
-            a.metric.split(":", 1)[1]
-            for a in assertions
-            if a.metric.startswith(("prop:", "fill:"))
-        }
-    )
-    if need_country:
-        # The reference counts entity.countries — the DISTINCT values of
-        # every country-typed prop (country, jurisdiction, mainCountry,
-        # nationality, citizenship) — and only over Thing-subtree
-        # entities (``zavod/zavod/exporters/statistics.py:106-110``:
-        # ``if entity.schema.is_a("Thing"): for country in
-        # entity.countries``). A dataset whose country signal lives in
-        # nationality must not undercount and abort the run. Same
-        # column expression as the statistics exporters, by import.
-        from opensanctions_spark.exporters import entity_countries
-        from opensanctions_spark.exporters.metadata import THING_SCHEMATA
-
-        rows = (
-            entities.filter(F.col("schema").isin(*THING_SCHEMATA))
-            .select(F.explode(entity_countries(F.col("properties"))).alias("c"))
-            .groupBy("c")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        out["countries"] = len(rows)
-        for r in rows:
-            out[f"country:{r['c']}"] = r["n"]
-    if pairs:
-        flags = [
-            (
-                F.size(
-                    F.coalesce(
-                        F.col("properties")[p.split(".", 1)[1]], F.array()
-                    )
-                )
-                > 0
-            )
-            .cast("long")
-            .alias(f"_f{i}")
-            for i, p in enumerate(pairs)
-        ]
-        rows = (
-            entities.select("schema", *flags)
-            .groupBy("schema")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                *[F.sum(f"_f{i}").alias(f"_s{i}") for i in range(len(pairs))],
-            )
-            .collect()
-        )
-        by_schema = {r["schema"]: r for r in rows}
-        for i, p in enumerate(pairs):
-            schema = p.split(".", 1)[0]
-            row = by_schema.get(schema)
-            filled = row[f"_s{i}"] if row is not None else 0
-            total = row["_n"] if row is not None else 0
-            out[f"prop:{p}"] = filled
-            out[f"fill:{p}"] = (filled / total) if total else 0.0
-    return out
-
-
 def check_assertions(stats: dict[str, float], assertions: list[Assertion]) -> list[str]:
     """Threshold checks over aggregate stats; returns violation messages.
     ``min`` failures are fatal in the reference (the caller raises).
@@ -347,11 +265,13 @@ def check_assertions(stats: dict[str, float], assertions: list[Assertion]) -> li
     0.0."""
     out = []
     for a in assertions:
+        missing = 0
         if a.metric.startswith("fill:"):
             schema = a.metric[5:].split(".", 1)[0]
             if not stats.get(f"schema:{schema}"):
                 continue
-        actual = stats.get(a.metric, 0)
+            missing = 0.0  # a present schema without the property
+        actual = stats.get(a.metric, missing)
         if a.op == "min" and actual < a.threshold:
             out.append(f"{a.level}: {a.metric}={actual} < min {a.threshold}")
         elif a.op == "max" and actual > a.threshold:
@@ -462,35 +382,43 @@ def _check(
     entities: DataFrame, assertions: list[Assertion]
 ) -> tuple[int, int, dict[str, int], list[str]]:
     """The check step: ``(entity_count, target_count, schema_counts,
-    violations)``. Per-schema counts and the entity/target totals come
-    out of ONE GROUPING SETS pass over the cached entity view (the
-    reference's validators share one scan the same way,
-    zavod/zavod/validators/__init__.py:72-104); the extended metrics
-    only run when an assertion needs them."""
-    from opensanctions_spark.exporters import target_flag
+    violations)``. Every metric comes out of the one facet aggregation
+    ``statistics.json`` is built from (``exporters.metadata.
+    _facet_counts``), here over the raw entity view — the reference's
+    validators share one scan the same way
+    (``zavod/zavod/validators/__init__.py:72-104``):
 
-    stat_rows = (
-        entities.select(
-            "schema",
-            target_flag(F.col("properties")).cast("long").alias("is_target"),
-        )
-        .groupingSets([["schema"], []], "schema")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("is_target").alias("n_target"),
-            F.grouping("schema").alias("g"),
-        )
-        .collect()
-    )
-    schema_counts = {r["schema"]: r["n"] for r in stat_rows if r["g"] == 0}
-    total = next(r for r in stat_rows if r["g"] == 1)
-    entity_count, target_count = total["n"], total["n_target"] or 0
+    - ``entity_count`` / ``target_count`` / ``schema:<S>``;
+    - ``country:<code>`` / ``countries``: ``entity.countries`` of
+      Thing-subtree entities only
+      (``zavod/zavod/exporters/statistics.py:106-110``), so a dataset
+      whose country signal lives in nationality does not undercount;
+    - ``prop:<S>.<p>`` / ``fill:<S>.<p>``: entities of schema S with a
+      non-empty p, as a count and as a share of S."""
+    from opensanctions_spark.exporters.metadata import _facet_counts
+
+    rows = _facet_counts(entities).collect()
+    by_schema = [r for r in rows if r["kind"] == "entity"]
+    schema_counts = {r["schema"]: r["n"] for r in by_schema}
+    countries = {
+        r["key"]: r["n_thing"]
+        for r in rows
+        if r["kind"] == "country" and r["n_thing"]
+    }
+    entity_count = sum(schema_counts.values())
+    target_count = sum(r["n_target"] for r in by_schema)
     stats: dict[str, float] = {
         "entity_count": entity_count,
         "target_count": target_count,
+        "countries": len(countries),
         **{f"schema:{k}": v for k, v in schema_counts.items()},
+        **{f"country:{k}": v for k, v in countries.items()},
     }
-    stats.update(_extended_stats(entities, assertions))
+    for r in rows:
+        if r["kind"] == "prop":
+            pair = f"{r['schema']}.{r['key']}"
+            stats[f"prop:{pair}"] = r["n"]
+            stats[f"fill:{pair}"] = r["n"] / schema_counts[r["schema"]]
     violations = check_assertions(stats, assertions)
     return entity_count, target_count, schema_counts, violations
 

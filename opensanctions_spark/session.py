@@ -13,9 +13,14 @@ one you would also set on a 1000-executor cluster:
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
+
+from opensanctions_spark.logs import get_logger
+
+_log = get_logger(__name__)
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -71,6 +76,17 @@ def get_session(app_name: str = "opensanctions-spark") -> SparkSession:
     return configure(builder).getOrCreate()
 
 
+@functools.cache
+def _warn_sever_fallback(master: str) -> None:
+    """Say once per master that a severing cut is not recoverable."""
+    _log.warning(
+        "materialize(sever=True) on a cluster without a checkpoint dir"
+        " falls back to localCheckpoint: one lost executor fails the job;"
+        " call SparkContext.setCheckpointDir for a reliable cut",
+        master=master,
+    )
+
+
 def materialize(df, eager: bool = True, sever: bool = False):
     """Cut a DataFrame's lineage in the deployment-appropriate way.
 
@@ -100,7 +116,8 @@ def materialize(df, eager: bool = True, sever: bool = False):
       — i.e. silently recompute — any plan still referencing it.
       Reliable ``checkpoint`` (replicated, lineage-free, recoverable)
       when a checkpoint dir is configured; else ``localCheckpoint`` as
-      the best available cut (accepting the executor-loss caveat).
+      the best available cut (accepting the executor-loss caveat),
+      logged once per master as a warning.
 
     Returned frames are not explicitly unpersisted by most call sites;
     the ContextCleaner reclaims blocks when the frame is GC'd (the bench
@@ -112,6 +129,7 @@ def materialize(df, eager: bool = True, sever: bool = False):
     if sever:
         if sc.getCheckpointDir() is not None:
             return df.checkpoint(eager=eager)
+        _warn_sever_fallback(sc.master)
         return df.localCheckpoint(eager=eager)
     from pyspark import StorageLevel
 

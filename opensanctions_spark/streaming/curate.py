@@ -28,6 +28,7 @@ delivery keeps results exact.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +50,16 @@ def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
         return spark.createDataFrame([], schema)
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, probed like ``_read_or_empty``: a
+    schema'd read only lists the path and runs no Spark job."""
+    try:
+        spark.read.schema("_ int").parquet(path)
+        return True
+    except AnalysisException:
+        return False
+
+
 def load_curation_index(
     spark: SparkSession, index_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -56,7 +67,18 @@ def load_curation_index(
 
     Band rows are re-distincted: (doc_id, k, mh) is naturally unique, so
     a retried micro-batch's double-append cannot inflate the
-    agreeing-band counts of the near-dup probe."""
+    agreeing-band counts of the near-dup probe.
+
+    An index in the older two-directory layout (``fingerprints`` and
+    ``bands``) raises ValueError: reading only ``entries`` would treat
+    it as empty and silently re-admit every duplicate it records."""
+    for legacy in ("fingerprints", "bands"):
+        if _path_exists(spark, f"{index_dir}/{legacy}"):
+            raise ValueError(
+                f"curation index {index_dir} uses the old two-directory"
+                f" layout ({legacy}/); this engine reads {index_dir}/entries"
+                " only — rebuild the index or move it aside"
+            )
     entries = _read_or_empty(spark, f"{index_dir}/entries", _ENTRIES_SCHEMA)
     fps = entries.filter(F.col("fp").isNotNull()).select("fp").distinct()
     bands = (

@@ -226,3 +226,22 @@ def test_streaming_curation_accumulates_index(spark, tmp_path):
     fps_idx, bands_idx = load_curation_index(spark, index_dir)
     assert fps_idx.count() == len(ids)
     assert bands_idx.select("doc_id").distinct().count() == len(ids)
+
+
+def test_load_curation_index_refuses_legacy_layout(spark, tmp_path):
+    """An index in the old two-directory layout must fail loudly: read
+    as an absent ``entries`` relation it would look empty and every
+    duplicate it records would be re-admitted."""
+    import pytest
+
+    from opensanctions_spark.streaming.curate import load_curation_index
+
+    index_dir = str(tmp_path / "index")
+    fps, bands = load_curation_index(spark, index_dir)  # absent: empty
+    assert fps.count() == 0 and bands.count() == 0
+    spark.createDataFrame([("f0",)], "fp string").write.parquet(
+        f"{index_dir}/fingerprints"
+    )
+    with pytest.raises(ValueError, match="fingerprints") as exc:
+        load_curation_index(spark, index_dir)
+    assert index_dir in str(exc.value)

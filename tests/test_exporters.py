@@ -15,7 +15,6 @@ from opensanctions_spark.exporters import (
     ftm_entities,
     names_export,
     reverse_adjacency,
-    statistics_facets,
     statistics_facets_grouped,
 )
 from opensanctions_spark.model.melt import melt_customers
@@ -95,25 +94,13 @@ def test_ftm_entities_target_flag(spark, sf_dir):
 
 def test_statistics_total_consistency(spark, sf_dir):
     entities = _export_entities(spark, sf_dir)
-    facets = statistics_facets(entities).collect()
+    facets = statistics_facets_grouped(entities).collect()
     by = {}
     for r in facets:
         by.setdefault(r["facet"], {})[r["value"]] = r["n"]
     total = by["total"]["entities"]
     assert sum(by["schema"].values()) == total
     assert sum(by["target"].values()) == total
-
-
-def test_grouped_facets_match_union_form(spark, sf_dir):
-    entities = _export_entities(spark, sf_dir)
-    union_rows = {
-        (r["facet"], r["value"]): r["n"] for r in statistics_facets(entities).collect()
-    }
-    grouped_rows = {
-        (r["facet"], r["value"]): r["n"]
-        for r in statistics_facets_grouped(entities).collect()
-    }
-    assert grouped_rows == union_rows
 
 
 def test_grouped_facets_count_entities_not_country_rows(spark):
@@ -133,6 +120,36 @@ def test_grouped_facets_count_entities_not_country_rows(spark):
     assert by["schema"] == {"Person": 1, "Company": 1}
     assert by["target"] == {"true": 1, "false": 1}
     assert by["total"] == {"entities": 2}
+
+
+def test_statistics_count_only_non_empty_properties(spark):
+    """statistics.json counts an entity under a property only when the
+    value array is non-empty: consolidation drops a letterless name, so
+    the LegalEntity whose only name is "123" has no name left."""
+    from opensanctions_spark.exporters.metadata import dataset_statistics
+    from opensanctions_spark.operators.consolidate import consolidate_entities
+
+    entities = spark.createDataFrame(
+        [
+            ("e1", "LegalEntity", {"name": ["123"], "country": ["de"]}),
+            ("e2", "LegalEntity", {"name": ["Acme"]}),
+        ],
+        "canonical_id string, schema string, properties map<string,array<string>>",
+    )
+    stats = dataset_statistics(consolidate_entities(entities))
+    by_prop = {
+        f["property"]: (f["count"], f["fill_rate"])
+        for f in stats["things"]["entities_with_prop"]
+    }
+    assert by_prop == {"name": (1, 0.5), "country": (1, 0.5)}
+    assert stats["properties"] == ["LegalEntity:country", "LegalEntity:name"]
+
+    only_letterless = consolidate_entities(entities.filter("canonical_id = 'e1'"))
+    stats = dataset_statistics(only_letterless)
+    assert stats["properties"] == ["LegalEntity:country"]
+    assert [f["property"] for f in stats["things"]["entities_with_prop"]] == [
+        "country"
+    ]
 
 
 def test_reverse_adjacency_inverts_forward(spark, sf_dir):
@@ -260,14 +277,13 @@ def test_statistics_country_facet_is_thing_countries(spark):
         ],
         "canonical_id string, schema string, properties map<string,array<string>>",
     )
-    for fn in (statistics_facets, statistics_facets_grouped):
-        rows = {
-            (r["facet"], r["value"]): r["n"]
-            for r in fn(entities).collect()
-        }
-        assert rows[("country", "ru")] == 1      # distinct per entity
-        assert rows[("country", "kz")] == 1
-        assert rows[("country", "vg")] == 1      # country+jurisdiction dedupe
-        assert ("country", "us") not in rows     # Sanction is not a Thing
-        assert rows[("total", "entities")] == 3  # entity facets unaffected
-        assert rows[("schema", "Sanction")] == 1
+    rows = {
+        (r["facet"], r["value"]): r["n"]
+        for r in statistics_facets_grouped(entities).collect()
+    }
+    assert rows[("country", "ru")] == 1      # distinct per entity
+    assert rows[("country", "kz")] == 1
+    assert rows[("country", "vg")] == 1      # country+jurisdiction dedupe
+    assert ("country", "us") not in rows     # Sanction is not a Thing
+    assert rows[("total", "entities")] == 3  # entity facets unaffected
+    assert rows[("schema", "Sanction")] == 1

@@ -32,3 +32,33 @@ def test_materialize_survives_reuse(spark):
     b = cut.agg(F.sum("id").alias("s"))
     assert a.count() == 5
     assert b.collect()[0]["s"] == sum(range(50))
+
+
+def test_sever_fallback_warns_once(caplog):
+    """A cluster master with no checkpoint dir falls back to
+    localCheckpoint for sever=True — and says so, once, naming the
+    setting that gives the reliable cut."""
+    import logging
+
+    from opensanctions_spark import session
+
+    class _Context:
+        master = "spark://cluster:7077"
+
+        def getCheckpointDir(self):
+            return None
+
+    class _Frame:
+        class sparkSession:
+            sparkContext = _Context()
+
+        def localCheckpoint(self, eager):
+            return ("local", eager)
+
+    session._warn_sever_fallback.cache_clear()
+    with caplog.at_level(logging.WARNING, logger="opensanctions_spark.session"):
+        assert materialize(_Frame(), eager=False, sever=True) == ("local", False)
+        assert materialize(_Frame(), sever=True) == ("local", True)
+    warnings = [r for r in caplog.records if "localCheckpoint" in r.getMessage()]
+    assert len(warnings) == 1
+    assert "setCheckpointDir" in warnings[0].getMessage()

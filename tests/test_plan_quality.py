@@ -139,6 +139,25 @@ def test_grouped_facets_are_one_expand_one_shuffle(spark):
     assert n == 1, f"grouping-sets facets should shuffle once, saw {n}"
 
 
+def test_entity_facet_counts_shuffle_once(spark):
+    from opensanctions_spark.exporters.metadata import _facet_counts
+
+    entities = spark.createDataFrame(
+        [
+            ("e%d" % i, "Person" if i % 2 else "Sanction",
+             {"country": ["de"], "name": ["N"], "programId": ["P"]})
+            for i in range(100)
+        ],
+        "canonical_id string, schema string, properties map<string,array<string>>",
+    )
+    plan = _executed_plan(_facet_counts(entities))
+    # statistics.json and the run check share ONE facet aggregation:
+    # every facet row is exploded in place and partially aggregated
+    # before a single hash exchange
+    n = plan.count("Exchange hashpartitioning")
+    assert n == 1, f"the entity facet aggregation should shuffle once, saw {n}"
+
+
 def test_train_split_is_map_only(spark, sf_dir):
     plan = _executed_plan(QUERIES["sample_train_split"](spark, sf_dir))
     # pure projection: split assignment must add no exchange of any kind

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from opensanctions_spark.plans.run import (
     Assertion,
     DatasetConfig,
-    _extended_stats,
+    _check,
     check_assertions,
     merge_assertions_config,
     parse_assertions,
@@ -155,16 +155,11 @@ def test_extended_stats_and_check(spark):
             "max": {"country_entities": {"de": 1}},
         }
     )
-    stats = {
-        "schema:Company": 3,
-        "schema:Person": 1,
-        **_extended_stats(entities, assertions),
-    }
-    assert stats["country:de"] == 2
-    assert stats["countries"] == 3
-    assert stats["prop:Company.name"] == 2
-
-    violations = check_assertions(stats, assertions)
+    entity_count, _, schema_counts, violations = _check(entities, assertions)
+    assert entity_count == 4
+    assert schema_counts == {"Company": 3, "Person": 1}
+    # the violation messages carry the measured values: country:de=2,
+    # countries=3, prop:Company.name=2
     assert "error: schema:Company=3 < min 10" in violations
     assert "error: country:de=2 < min 3" in violations
     assert "error: countries=3 < min 7" in violations
@@ -182,12 +177,10 @@ def test_fill_rate_skips_absent_schema(spark):
             "Company": {"name": 0.95}}}}
     )
     only_person = _entities(spark, [("e1", "Person", {"name": ["V P"]})])
-    stats = {"schema:Person": 1, **_extended_stats(only_person, assertions)}
-    assert check_assertions(stats, assertions) == []
+    assert _check(only_person, assertions)[3] == []
 
     nameless = _entities(spark, [("e1", "Person", {"country": ["ru"]})])
-    stats = {"schema:Person": 1, **_extended_stats(nameless, assertions)}
-    violations = check_assertions(stats, assertions)
+    violations = _check(nameless, assertions)[3]
     assert violations == ["error: fill:Person.name=0.0 < min 0.95"]
 
 
@@ -241,11 +234,60 @@ def test_extended_stats_all_country_props_things_only(spark):
     assertions = parse_assertions(
         {"min": {"country_entities": {"ru": 1}, "countries": 3}}
     )
-    stats = _extended_stats(entities, assertions)
-    assert stats["countries"] == 3          # ru, kz, vg; Sanction's us excluded
-    assert stats["country:ru"] == 1          # distinct per entity
-    assert stats["country:kz"] == 1
-    assert "country:us" not in stats
-    assert check_assertions(
-        {"schema:Person": 1, **stats}, assertions
-    ) == []
+    assert _check(entities, assertions)[3] == []
+    # max-0 probes surface each measured value in its warning message
+    probes = parse_assertions(
+        {"max": {"countries": 0,
+                 "country_entities": {"ru": 0, "kz": 0, "us": 0}}}
+    )
+    violations = _check(entities, probes)[3]
+    assert sorted(violations) == [
+        "warning: countries=3 > max 0",      # ru, kz, vg; Sanction's us excluded
+        "warning: country:kz=1 > max 0",
+        "warning: country:ru=1 > max 0",     # distinct per entity
+    ]
+
+
+def test_check_counts_match_dataset_statistics(spark):
+    """The check step and statistics.json read the same facet
+    aggregation: on one entity view every count the check measures
+    equals the published statistics number."""
+    from opensanctions_spark.exporters.metadata import dataset_statistics
+
+    entities = _entities(
+        spark,
+        [
+            ("e1", "Company", {"name": ["A"], "country": ["de"],
+                               "topics": ["sanction"]}),
+            ("e2", "Company", {"name": ["B"], "jurisdiction": ["de", "fr"]}),
+            ("e3", "Person", {"nationality": ["ru"], "name": [],
+                              "topics": ["crime"]}),
+            ("e4", "Sanction", {"country": ["us"], "programId": ["P1"]}),
+        ],
+    )
+    stats = dataset_statistics(entities)
+    expected = {
+        "countries": len(stats["things"]["countries"]),
+        **{f"country:{f['code']}": f["count"]
+           for f in stats["things"]["countries"]},
+        **{f"prop:{f['schema']}.{f['property']}": f["count"]
+           for f in stats["things"]["entities_with_prop"]},
+        **{f"fill:{f['schema']}.{f['property']}": f["fill_rate"]
+           for f in stats["things"]["entities_with_prop"]},
+    }
+    probes = [Assertion(m, "max", -1, "warning") for m in expected]
+    entity_count, target_count, schema_counts, violations = _check(
+        entities, probes
+    )
+    assert entity_count == stats["entity_count"] == 4
+    assert target_count == stats["target_count"] == 2
+    assert sorted(schema_counts) == stats["schemata"]
+    assert {
+        f["schema"]: f["total"] for f in stats["things"]["entities_with_prop"]
+    }.items() <= schema_counts.items()
+    # a max -1 probe fails on every metric, reporting its measured value
+    assert sorted(violations) == sorted(
+        f"warning: {m}={n} > max -1" for m, n in expected.items()
+    )
+    assert expected["countries"] == 3            # de, fr, ru; us is a Sanction
+    assert "prop:Person.name" not in expected    # empty value array

@@ -77,11 +77,14 @@ def test_quantized_dims_guards_packed_argmin_domain(spark):
     rows = _quantized_dims(ok).collect()
     assert sorted(r["q"] for r in rows) == [-2000000, 0, 1900000]
 
-    bad = spark.createDataFrame(
-        [(1, [0.5, 2.5])], "vec_id long, embedding array<double>"
-    )
     import pytest
 
-    with pytest.raises(Exception) as exc:
-        _quantized_dims(bad).collect()
-    assert "packed-argmin" in str(exc.value)
+    # 2.0000005 floors to q = 2000000, inside the q range: the guard
+    # checks the raw value, as its message says
+    for value in (2.5, 2.0000005):
+        bad = spark.createDataFrame(
+            [(1, [0.5, value])], "vec_id long, embedding array<double>"
+        )
+        with pytest.raises(Exception) as exc:
+            _quantized_dims(bad).collect()
+        assert "packed-argmin" in str(exc.value)
